@@ -205,56 +205,55 @@ object Bench {
     // improve by moving work into warm(). Runs AFTER the timed suite so
     // steady-state numbers are unaffected; opt out for local iteration
     // with SPARK_GRAFT_BENCH_COLD=0.
-    // Each cold entry: Some((wall, exec, load-at-start)) or None on
-    // failure — a failed query must NOT flow a near-zero timing into
+    // Each cold entry: Some((wall, exec, gc, load-at-start)) or None on
+    // failure — a failed query must NOT flow its time-to-failure into
     // the cold totals unmarked (ADVICE r9); failures are named in
-    // bench_detail's "cold_failed" and their timings excluded/nulled.
-    val coldFailed = scala.collection.mutable.LinkedHashSet[String]()
+    // bench_detail's "cold_failed"/"cold2_failed" and their timings
+    // excluded/nulled.
+    def coldSample(tag: String, name: String): Option[(Double, Double, Double, Double)] = {
+      val ld = load1()
+      drainBus() // exact per-query exec windows (ADVICE r12)
+      val (e0, g0) = (execMs.get(), gcMs.get())
+      val t0 = System.nanoTime()
+      val ok =
+        try {
+          SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $tag $name failed: ${e.getMessage}")
+          false
+        }
+      val wall = (System.nanoTime() - t0) / 1e9
+      drainBus()
+      val (e1, g1) = (execMs.get(), gcMs.get())
+      // release the bypass-rebuilt persisted frames NOW: ~50
+      // accumulated orphans evict the warm input layer and skew
+      // every later cold timing (ADVICE r9)
+      SessionMemo.drainColdOrphans()
+      if (ok) Some((wall, (e1 - e0) / 1e3, (g1 - g0) / 1e3, ld)) else None
+    }
+    // One cold sample per name, in order. LinkedHashMap: serialization
+    // order IS execution order, and the detail file carries an explicit
+    // `cold_order` array — the anomaly-window diff previously leaned on
+    // JSON-object/HashMap iteration order agreeing across rounds, an
+    // implicit invariant nothing asserted (ADVICE r12). try/finally: a
+    // throw outside the per-query catch must not leave coldMode latched
+    // and silently bypass every later memo read in this JVM.
+    def coldPass(tag: String, names: Seq[String]) = {
+      SessionMemo.coldMode = true
+      try scala.collection.mutable.LinkedHashMap.from(names.map(n => n -> coldSample(tag, n)))
+      finally SessionMemo.coldMode = false
+    }
     // 4th cold element (round 11): per-query JVM GC seconds — the r11
     // run-to-run cold spread (256 vs 391 s on identical code) needed
     // memory pressure separable from task work before it could be
     // attributed; storage snapshots bracket the pass for the same reason
     val coldStorageStart = storageSnap()
-    // LinkedHashMap: serialization order IS execution order, and the
-    // detail file carries an explicit `cold_order` array — the anomaly-
-    // window diff previously leaned on JSON-object/HashMap iteration
-    // order agreeing across rounds, an implicit invariant nothing
-    // asserted (ADVICE r12).
     val coldDetail: scala.collection.Map[String, Option[(Double, Double, Double, Double)]] =
       if (sys.env.get("SPARK_GRAFT_BENCH_COLD").contains("0"))
         scala.collection.mutable.LinkedHashMap.empty
-      else {
-        SessionMemo.coldMode = true
-        // .toSeq BEFORE the map: mapping the Map itself would collect
-        // results into a fresh HashMap and LinkedHashMap.from would
-        // record ITS hash order, not the order the loop actually ran
-        val m = scala.collection.mutable.LinkedHashMap.from(
-          SparkEntry.queries.toSeq.map { case (name, fn) =>
-          val ld = load1()
-          drainBus() // exact per-query exec windows (ADVICE r12)
-          val (e0, g0) = (execMs.get(), gcMs.get())
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] cold $name failed: ${e.getMessage}")
-              coldFailed += name
-              false
-            }
-          val wall = (System.nanoTime() - t0) / 1e9
-          drainBus()
-          val (e1, g1) = (execMs.get(), gcMs.get())
-          // release the bypass-rebuilt persisted frames NOW: ~50
-          // accumulated orphans evict the warm input layer and skew
-          // every later cold timing (ADVICE r9)
-          SessionMemo.drainColdOrphans()
-          name -> (if (ok)
-            Some((wall, (e1 - e0) / 1e3, (g1 - g0) / 1e3, ld))
-          else None)
-        })
-        SessionMemo.coldMode = false
-        m
-      }
+      else coldPass("cold", SparkEntry.queries.keys.toSeq)
+    val coldFailed = coldDetail.collect { case (n, None) => n }
     // Second cold sample for the top spenders (VERDICT r14 Next #3):
     // the cold pass takes ONE sample per query while sibling rebuilds
     // run before/after it, and the in-pass pressure spreads cold
@@ -263,35 +262,17 @@ object Bench {
     // top-K wall spenders AFTER the pass (pressure over, inputs still
     // warm — the isolated basis ColdProf measures) bounds the dominant
     // error at ~1/6 the cost. Emitted as [in-suite, isolated] pairs in
-    // bench_detail ("queries_cold2_wall_exec"); existing cold_sec /
-    // cold_exec_sec keep their one-sample basis unchanged.
+    // bench_detail ("queries_cold2_wall_exec", failed resamples named in
+    // "cold2_failed" instead); existing cold_sec / cold_exec_sec keep
+    // their one-sample basis unchanged.
     val cold2K = sys.env.getOrElse("SPARK_GRAFT_BENCH_COLD2_K", "12").toInt
-    val cold2Detail: scala.collection.Map[String, (Double, Double, Double, Double)] =
+    val cold2: scala.collection.Map[String, Option[(Double, Double, Double, Double)]] =
       if (coldDetail.isEmpty || cold2K <= 0) Map.empty
-      else {
-        val top = coldDetail.toSeq
-          .collect { case (n, Some(t)) => (n, t._1) }
-          .sortBy(-_._2).take(cold2K).map(_._1)
-        SessionMemo.coldMode = true
-        val m = scala.collection.mutable.LinkedHashMap.from(top.map { name =>
-          val fn = SparkEntry.queries(name)
-          val ld = load1()
-          drainBus()
-          val (e0, g0) = (execMs.get(), gcMs.get())
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] cold2 $name failed: ${e.getMessage}")
-          }
-          val wall = (System.nanoTime() - t0) / 1e9
-          drainBus()
-          val (e1, g1) = (execMs.get(), gcMs.get())
-          SessionMemo.drainColdOrphans()
-          name -> ((wall, (e1 - e0) / 1e3, (g1 - g0) / 1e3, ld))
-        })
-        SessionMemo.coldMode = false
-        m
-      }
+      else coldPass("cold2", coldDetail.toSeq
+        .collect { case (n, Some(t)) => (n, t._1) }
+        .sortBy(-_._2).take(cold2K).map(_._1))
+    val cold2Detail = cold2.collect { case (n, Some(t)) => n -> t }
+    val cold2Failed = cold2.collect { case (n, None) => n }
     val coldStorageEnd = storageSnap()
     val calPostCold = calibrate()
     def r3(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
@@ -333,11 +314,10 @@ object Bench {
         case (k, None) => "\"" + k + "\":null"
       }
       .mkString("{", ",", "}")
-    val coldFailedJson = coldFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def names(ns: Iterable[String]) = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
     val cold2Json = cold2Detail.map { case (k, (w, e, g, ld)) =>
       "\"" + k + s"""\":[${r3(w)},${r3(e)},${r3(g)},${r3(ld)}]"""
     }.mkString("{", ",", "}")
-    val memoJson = memoWarmed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // post-runs cache state per query: [cached_mb, n_rdds, n_partial]
     val storageJson = storageDetail.map { case (k, (mb, n, p, z)) =>
       "\"" + k + s"""\":[$mb,$n,$p,$z]"""
@@ -355,12 +335,12 @@ object Bench {
     val detail =
       s"""{"queries_med":${fmt(med)},"queries_min":${fmt(_.head)},"queries_max":${fmt(_.last)},""" +
       s""""queries_exec_med":$execMedJson,""" +
-      s""""queries_cold_wall_exec":$coldJson,"cold_failed":$coldFailedJson,""" +
-      s""""queries_cold2_wall_exec":$cold2Json,""" +
-      s""""cold_order":${coldDetail.keys.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""queries_cold_wall_exec":$coldJson,"cold_failed":${names(coldFailed)},""" +
+      s""""queries_cold2_wall_exec":$cold2Json,"cold2_failed":${names(cold2Failed)},""" +
+      s""""cold_order":${names(coldDetail.keys)},""" +
       s""""storage_cold_start":[${coldStorageStart._1},${coldStorageStart._2},${coldStorageStart._3},${coldStorageStart._4}],""" +
       s""""storage_cold_end":[${coldStorageEnd._1},${coldStorageEnd._2},${coldStorageEnd._3},${coldStorageEnd._4}],""" +
-      s""""memo_warmed":$memoJson,""" +
+      s""""memo_warmed":${names(memoWarmed)},""" +
       s""""load_prewarm":${r3(loadPrewarm)},""" +
       s""""load_start":${r3(loadStart)},"load_end":${r3(load1())},""" +
       s""""storage_mb_rdds_partial":$storageJson,""" +

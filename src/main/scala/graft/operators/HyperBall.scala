@@ -67,7 +67,7 @@ object HyperBall {
     * max-merge and the round-plan dump can show the exchange schema. */
   private[graft] def packCols: Seq[Column] =
     (1 to Scale).map(k =>
-      when(col("rho") >= k, expr("shiftleft(CAST(1 AS BIGINT), bucket)"))
+      when(col("rho") >= k, expr("shiftleft(CAST(1 AS BIGINT), CAST(bucket AS INT))"))
         .otherwise(lit(0L)).as(s"b$k"))
 
   /** one register-merge round: push every node's packed registers to

@@ -53,93 +53,48 @@ object Iterative {
       build: => DataFrame): DataFrame =
     symMemo.getOrElseUpdate(spark, s"$dir#$what")(build.persist())
 
-  /** Partition count for a persisted edge table (round 15): the
-    * session's core count as a FLOOR, growing with the table's own
-    * estimated size once partitions would exceed [[EdgeMaxChunkBytes]]
-    * (guide §2.2's 100 MB-1 GB partition band). The previous keyless
-    * `repartition(col)` always produced `spark.sql.shuffle.partitions`
-    * (= the core-count env) partitions — right locally, but a TB-scale
-    * edge table at 100 TB would land in those same 32 partitions, and
-    * every downstream round join inherits that ceiling. At local SFs
-    * the formula reduces to exactly the r14 layout (bytes ≪
-    * 128 MB × cores → floor = cores), so the bench basis is unchanged.
-    *
-    * Measured and REJECTED (this round): partitioning strictly by size
-    * with no core floor (1-2 partitions at sf0.1). The fixpoint
-    * rounds' 32 near-empty tasks do carry fixed overhead (StageProf:
-    * it_connected_components = 33 stages × 32 tasks × ~90 ms/task for
-    * ≤8.5 MB moved), but the shared tables also feed joins whose
-    * OUTPUTS dwarf their inputs (wedge/stress Σdeg² streams): with a
-    * 1-partition edge side those joins inherit 1-partition outputs,
-    * the shared warm fill crawled 93 → 582 s, and AQE's skew-split
-    * shattered the monster partition into a 20k-task stage. A
+  /** Hash-partition an edge table by `key` into the session's core
+    * count. The count is explicit so AQE cannot coalesce the cached
+    * table away from the co-partitioned round join. It is not derived
+    * from the table's size: Catalyst's estimate of a derived or
+    * not-yet-materialized frame multiplies through joins (a 3-way
+    * self-join of a few thousand rows estimates ~10^14 bytes), and a
     * structure-bearing table's partition count bounds the parallelism
-    * of work PROPORTIONAL TO ITS JOIN FAN-OUT, not to its bytes — so
-    * the floor stays at the core count. */
-  val EdgeMaxChunkKey = "graft.iterative.edgeMaxChunkBytes"
-  val EdgeMaxChunkBytes = 128L << 20
-
-  private[graft] def sizedPartitions(df: DataFrame): Int = {
-    val spark = df.sparkSession
-    val maxChunk = spark.conf.getOption(EdgeMaxChunkKey).map(_.toLong)
-      .getOrElse(EdgeMaxChunkBytes)
-    val plan = df.queryExecution.optimizedPlan
-    // Size basis: min(plan estimate, Σ leaf bytes × 8). Catalyst
-    // propagates sizeInBytes multiplicatively through joins/windows/
-    // generators without column stats, so a derived plan's estimate
-    // can run far past reality; the leaf sum (parquet file bytes or
-    // materialized cache bytes) bounds it — this derivation only
-    // projects, filters, unions both orientations of, or window-
-    // numbers its leaves. The ×8 covers the symmetrize union and
-    // parquet→in-memory expansion.
-    val leafBytes = plan.collectLeaves()
-      .map(l => BigInt(l.stats.sizeInBytes.toString)).sum * 8
-    val bytes = BigInt(plan.stats.sizeInBytes.toString).min(leafBytes)
-    val cores = spark.sparkContext.defaultParallelism.toLong
-    val bySize = (bytes / maxChunk).toLong + 1
-    val n = math.max(bySize, cores).min(1000000L).toInt
-    itLog(s"sizedPartitions: plan=${plan.stats.sizeInBytes} leaf8=$leafBytes -> $n")
-    n
-  }
-
-  private def sizedRepartition(df: DataFrame, key: Column): DataFrame =
-    df.repartition(sizedPartitions(df), key)
+    * of the joins that consume it, which is proportional to their
+    * fan-out, not to the table's bytes. */
+  private def coPartitioned(df: DataFrame, key: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
 
   /** whole-graph symmetrized edges, hash-partitioned by src (the
     * frontier-join key of [[iterateCost]]) */
   private[graft] def symAllSrc(spark: SparkSession, dir: String): DataFrame =
     memoEdges(spark, dir, "symAllSrc")(
-      sizedRepartition(symmetrize(TpchGraph.relsLite(spark, dir)), col("src")))
+      coPartitioned(symmetrize(TpchGraph.relsLite(spark, dir)), "src"))
 
   /** whole-graph symmetrized edges partitioned by dst (the peel loss
     * join key of [[kcoreSurvivors]]/[[corenessOf]]) */
   private[graft] def symAllDst(spark: SparkSession, dir: String): DataFrame =
     memoEdges(spark, dir, "symAllDst")(
-      sizedRepartition(symmetrize(TpchGraph.relsLite(spark, dir)), col("dst")))
+      coPartitioned(symmetrize(TpchGraph.relsLite(spark, dir)), "dst"))
 
   /** whole-graph symmetrized DISTINCT edges by src (simple-graph
     * consumers that join forward on src: stress centrality) */
   private[graft] def symAllSrcDistinct(spark: SparkSession, dir: String): DataFrame =
-    memoEdges(spark, dir, "symAllSrcDistinct") {
-      val rels = TpchGraph.relsLite(spark, dir).select("src", "dst")
-      sizedRepartition(
-        rels.unionAll(rels.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct(), col("src"))
-    }
+    memoEdges(spark, dir, "symAllSrcDistinct")(
+      coPartitioned(symmetrize(TpchGraph.relsLite(spark, dir)).distinct(), "src"))
 
   /** HAS_PART-subgraph symmetrized edges by src (CC and LPA) */
   private[graft] def symHasPartSrc(spark: SparkSession, dir: String): DataFrame =
     memoEdges(spark, dir, "symHasPartSrc")(
-      sizedRepartition(
+      coPartitioned(
         symmetrize(TpchGraph.relsLite(spark, dir).filter(col("type") === "HAS_PART")),
-        col("src")))
+        "src"))
 
   /** whole-graph DIRECTED edges by src (PageRank/PPR share joins
     * forward along src; HITS reuses it for both half-rounds) */
   private[graft] def dirAllSrc(spark: SparkSession, dir: String): DataFrame =
     memoEdges(spark, dir, "dirAllSrc")(
-      sizedRepartition(TpchGraph.relsLite(spark, dir).select("src", "dst"),
-        col("src")))
+      coPartitioned(TpchGraph.relsLite(spark, dir).select("src", "dst"), "src"))
 
   /** whole-graph symmetrized WEIGHTED edges by src (SSSP; weights are
     * the deterministic id-derived costs) */
@@ -147,16 +102,19 @@ object Iterative {
     memoEdges(spark, dir, "symWeightedSrc") {
       val r = TpchGraph.rels(spark, dir)
       def w = pmod(col("id"), lit(WeightMod)) + lit(1L)
-      sizedRepartition(
+      coPartitioned(
         r.select(col("src"), col("dst"), w.as("w"))
           .unionAll(r.select(col("dst").as("src"), col("src").as("dst"), w.as("w"))),
-        col("src"))
+        "src")
     }
 
   /** broadcast hint only when the side is provably small (rows counted
     * from the already-materialized checkpoint of the previous round) */
   private[graft] def hinted(df: DataFrame, rows: Long, maxRows: Long): DataFrame =
     if (rows <= maxRows) broadcast(df) else df
+
+  private def itLog(msg: => String): Unit =
+    if (sys.env.contains("GRAFT_ITER_LOG")) println(s"[iter] $msg")
 
   /** Delta (frontier) iteration: only labels that CHANGED last round
     * propagate. Exact for monotone min-propagation (any round-k
@@ -171,7 +129,7 @@ object Iterative {
     * never force-broadcast. `frontier0` lets BFS seed with just the
     * sources (sentinel labels can never improve a neighbor).
     *
-    * Each round ends in an eager `localCheckpoint`, not persist+count:
+    * Each round ends in a `localCheckpoint`, not persist+count:
     * round k+1 references round k TWICE (labels and frontier), so
     * without lineage truncation the logical plan doubles per round —
     * caching shortcuts re-EXECUTION, but Catalyst still re-analyzes an
@@ -180,9 +138,41 @@ object Iterative {
     * constant-size LogicalRDD; superseded rounds are dropped when their
     * reference goes (ContextCleaner), and the edge table stays persisted
     * across all rounds — the iterate-over-cached-edges shape GraphX
-    * uses, valid at any cluster size. */
-  private def itLog(msg: => String): Unit =
-    if (sys.env.contains("GRAFT_ITER_LOG")) println(s"[iter] $msg")
+    * uses, valid at any cluster size. The checkpoint is LAZY: the
+    * round's frontier count is the action that pins the block, so each
+    * round runs ONE job (round shuffle + checkpoint write + count).
+    *
+    * `round(v, frontier, frontierRows)` builds one round's
+    * (node, label, newl) table; this loop owns everything around it.
+    * The round-0 frontier is `frontier0`, or all of `v0` without one. */
+  private def frontierLoop(v0: DataFrame, frontier0: Option[DataFrame],
+                           iters: Int, tag: String)(
+      round: (DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
+    // LAZY checkpoint: v is first touched by round 0, whose frontier
+    // count pins the block — eager materialization here was a serial
+    // full-vertex job before any round started
+    var v = v0.localCheckpoint(false)
+    var frontier = frontier0.getOrElse(v)
+    // count over checkpointed rows (or the seed filter) — one cheap
+    // scan per round that buys the broadcast-vs-shuffle decision
+    var frontierRows = frontier.count()
+    var r = 0
+    // early exit on an empty frontier: with no improved labels there
+    // are no messages, so every remaining round is a no-op — the
+    // result is bit-identical to the oracle's full unroll, and the
+    // converged tail costs zero jobs instead of 2·rounds
+    while (r < iters && frontierRows > 0) {
+      val t0 = System.nanoTime()
+      val joined = round(v, frontier, frontierRows).localCheckpoint(false)
+      frontier = joined.filter(col("newl") < col("label"))
+        .select(col("node"), col("newl").as("label"))
+      frontierRows = frontier.count()
+      itLog(s"${tag}round $r (frontier=$frontierRows): ${(System.nanoTime() - t0) / 1e9}s")
+      v = joined.select(col("node"), col("newl").as("label"))
+      r += 1
+    }
+    v
+  }
 
   /** One min-propagation round, un-checkpointed — factored out so the
     * plan-shape spec can pin the join strategy directly: small
@@ -210,12 +200,12 @@ object Iterative {
                               frontierRows: Long, maxRows: Long): DataFrame =
     costRound(v, frontier, edges, col("label") + delta, frontierRows, maxRows)
 
-  /** Shared driver loop for any monotone min-cost propagation. The
-    * frontier optimization stays exact for any non-negative edge cost:
-    * a round-k improvement at v arrives via a neighbor u whose label
-    * improved at round k-1 (otherwise the same message existed at
-    * k-1 and v would already hold it), so relaxing only frontier-out
-    * edges yields exactly the full round-k Bellman-Ford labels. */
+  /** Min-cost propagation over [[frontierLoop]]. The frontier
+    * optimization stays exact for any non-negative edge cost: a round-k
+    * improvement at v arrives via a neighbor u whose label improved at
+    * round k-1 (otherwise the same message existed at k-1 and v would
+    * already hold it), so relaxing only frontier-out edges yields
+    * exactly the full round-k Bellman-Ford labels. */
   private def iterateCost(v0: DataFrame, edges0: DataFrame, iters: Int,
                           cost: Column, frontier0: Option[DataFrame],
                           prepared: Boolean = false): DataFrame = {
@@ -229,34 +219,9 @@ object Iterative {
     // common case — see SCALE.md's oscillation caveat.)
     // `prepared` callers pass a session-memoized table already in this
     // shape — it is shared across queries/runs and NOT unpersisted here.
-    val edges = if (prepared) edges0 else sizedRepartition(edges0, col("src")).persist()
-    // LAZY checkpoint: v is first touched by round 0's costRound, whose
-    // frontier count pins the block — eager materialization here was a
-    // serial full-vertex job before any round started
-    var v = v0.localCheckpoint(false)
-    var frontier = frontier0.getOrElse(v)
-    // count over checkpointed rows (or the seed filter) — one cheap
-    // scan per round that buys the broadcast-vs-shuffle decision
-    var frontierRows = frontier.count()
-    var round = 0
-    // early exit on an empty frontier: with no improved labels there
-    // are no messages, so every remaining round is a no-op — the
-    // result is bit-identical to the oracle's full unroll, and the
-    // converged tail costs zero jobs instead of 2·rounds
-    while (round < iters && frontierRows > 0) {
-      val t0 = System.nanoTime()
-      // LAZY checkpoint: the frontier count below is the action that
-      // materializes it, so each round runs ONE job (round shuffle +
-      // checkpoint write + count) instead of two. Lineage truncation
-      // is identical — the block is pinned on first action.
-      val joined = costRound(v, frontier, edges, cost, frontierRows, maxRows)
-        .localCheckpoint(false)
-      frontier = joined.filter(col("newl") < col("label"))
-        .select(col("node"), col("newl").as("label"))
-      frontierRows = frontier.count()
-      itLog(s"round $round (frontier=$frontierRows): ${(System.nanoTime() - t0) / 1e9}s")
-      v = joined.select(col("node"), col("newl").as("label"))
-      round += 1
+    val edges = if (prepared) edges0 else coPartitioned(edges0, "src").persist()
+    val v = frontierLoop(v0, frontier0, iters, "") { (v, frontier, frontierRows) =>
+      costRound(v, frontier, edges, cost, frontierRows, maxRows)
     }
     if (!prepared) edges.unpersist()
     v
@@ -390,7 +355,7 @@ object Iterative {
     * fixpoint the oracle's plain unrolled rounds reach. Do not use it
     * where bounded-round trajectory semantics are the contract.
     *
-    * Scale shape per round: ONE job, like [[iterateCost]]'s rounds —
+    * Scale shape per round: ONE job, like every [[frontierLoop]] round —
     * the hook's message aggregation (frontier broadcast when small,
     * co-partitioned against the cached edge table otherwise) plus the
     * shortcut as a second left join against the PREVIOUS round's
@@ -405,13 +370,10 @@ object Iterative {
   private[graft] def iterateMinJump(v0: DataFrame, edges: DataFrame,
                                     iters: Int): DataFrame = {
     val maxRows = broadcastMaxRows(v0.sparkSession)
-    var v = v0.localCheckpoint(false)
-    var frontier = v
-    var frontierRows = frontier.count()
-    val nNodes = frontierRows
-    var round = 0
-    while (round < iters && frontierRows > 0) {
-      val t0 = System.nanoTime()
+    // |V|: round 0's frontier is every node, and v keeps one row per node
+    var nNodes = -1L
+    frontierLoop(v0, None, iters, "jump ") { (v, frontier, frontierRows) =>
+      if (nNodes < 0) nNodes = frontierRows
       // hook messages: min frontier-neighbor label per node
       val m = edges
         .join(hinted(frontier.select(col("node").as("src"), col("label")),
@@ -426,22 +388,13 @@ object Iterative {
       // graph, so hinting by frontier size risks an over-threshold
       // broadcast (ADVICE r9). When nNodes > maxRows AQE still
       // converts the join at runtime from m's measured size.
-      val joined = v
-        .join(hinted(m, nNodes, maxRows), Seq("node"), "left")
+      v.join(hinted(m, nNodes, maxRows), Seq("node"), "left")
         .join(lookup, col("label") === col("jn"), "left")
         .select(col("node"), col("label"),
           least(col("label"),
             coalesce(col("minl"), col("label")),
             coalesce(col("jl"), col("label"))).as("newl"))
-        .localCheckpoint(false)
-      frontier = joined.filter(col("newl") < col("label"))
-        .select(col("node"), col("newl").as("label"))
-      frontierRows = frontier.count()
-      itLog(s"jump round $round (frontier=$frontierRows): ${(System.nanoTime() - t0) / 1e9}s")
-      v = joined.select(col("node"), col("newl").as("label"))
-      round += 1
     }
-    v
   }
 
   /** Converged connected components of the order↔part subgraph: unlike
@@ -493,10 +446,10 @@ object Iterative {
           .select(col("node"), coalesce(col("label"), col("node")).as("label"))
       } else {
         val dep = ep.distinct()
-        val sym = sizedRepartition(
+        val sym = coPartitioned(
           dep.select(col("p").as("src"), col("mp").as("dst"))
             .unionAll(dep.select(col("mp").as("src"), col("p").as("dst"))),
-          col("src")).persist()
+          "src").persist()
         val r = iterateMinJump(pv.select(col("node"),
           col("node").as("label")), sym, CcConvergeIters)
         sym.unpersist()
@@ -648,7 +601,29 @@ object Iterative {
   }
 
   /** node ids surviving `iters` peel rounds of the k-core over an
-    * already-symmetrized edge set — factored for hand-graph specs.
+    * already-symmetrized edge set — one [[peelLevel]], factored for
+    * hand-graph specs. */
+  private[graft] def kcoreSurvivors(edges0: DataFrame, k: Int,
+                                    iters: Int,
+                                    prepared: Boolean = false): DataFrame = {
+    val maxRows = broadcastMaxRows(edges0.sparkSession)
+    // partitioned by dst — the per-round loss join keys on dst, and
+    // the degree groupBy's exchange is paid once on smaller deg rows
+    val edges = if (prepared) edges0 else coPartitioned(edges0, "dst").persist()
+    val (deg, _, _) = peelLevel(edges, degrees(edges), k, iters, maxRows)
+    if (!prepared) edges.unpersist()
+    deg.filter(col("deg") >= 1).select(col("node").as("id"))
+  }
+
+  /** (node, deg) over an edge set, eagerly pinned */
+  private def degrees(edges: DataFrame): DataFrame =
+    edges.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("deg")).localCheckpoint(true)
+
+  /** Up to `iters` delta-peel rounds at threshold `k`, starting from the
+    * degree table `deg0` of the surviving subgraph of `edges`. Returns
+    * the surviving degrees, each round's dropped node set (latest
+    * first), and whether the level reached its fixpoint.
     *
     * Delta form: instead of recounting every degree from a re-filtered
     * edge table each round (two full edge shuffles × rounds), the edge
@@ -661,15 +636,10 @@ object Iterative {
     * (almost everything below k) degrades to a shuffle join instead of
     * an OOM. One partial-agg shuffle per round over the dropped
     * nodes' neighborhoods only — the 100× shape. */
-  private[graft] def kcoreSurvivors(edges0: DataFrame, k: Int,
-                                    iters: Int,
-                                    prepared: Boolean = false): DataFrame = {
-    val maxRows = broadcastMaxRows(edges0.sparkSession)
-    // partitioned by dst — the per-round loss join keys on dst, and
-    // the degree groupBy's exchange is paid once on smaller deg rows
-    val edges = if (prepared) edges0 else sizedRepartition(edges0, col("dst")).persist()
-    var deg = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint(true)
+  private def peelLevel(edges: DataFrame, deg0: DataFrame, k: Int, iters: Int,
+                        maxRows: Long): (DataFrame, List[DataFrame], Boolean) = {
+    var deg = deg0
+    var drops: List[DataFrame] = Nil
     var round = 0
     var fixed = false
     while (round < iters && !fixed) {
@@ -682,6 +652,7 @@ object Iterative {
         // same sets), just without their per-round jobs
         fixed = true
       } else {
+        drops ::= dropped
         val loss = edges
           .join(hinted(dropped.select(col("node").as("dst")), droppedRows, maxRows),
             "dst")
@@ -693,8 +664,7 @@ object Iterative {
       }
       round += 1
     }
-    if (!prepared) edges.unpersist()
-    deg.filter(col("deg") >= 1).select(col("node").as("id"))
+    (deg, drops, fixed)
   }
 
   /** Full core decomposition depth: coreness is reported for
@@ -710,7 +680,7 @@ object Iterative {
     * Level 1 is the IDENTITY on edge-endpoint nodes (a threshold-1
     * peel only removes degree-0 nodes, which cannot appear in an edge
     * list) — both engines take distinct endpoints directly instead of
-    * running three no-op rounds; levels 2..max run [[kcoreSurvivors]]
+    * running three no-op rounds; levels 2..max run [[peelLevel]]
     * on the cascaded edge set. Bounded rounds per level, replayed
     * identically by the oracle, so short-of-convergence results still
     * compare exactly. Scale: each level is the kcore shape (delta
@@ -753,34 +723,16 @@ object Iterative {
                                 prepared: Boolean = false): DataFrame = {
     val spark = e0.sparkSession
     val maxRows = broadcastMaxRows(spark)
-    val edges = if (prepared) e0 else sizedRepartition(e0, col("dst")).persist()
-    var deg = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint(true)
+    val edges = if (prepared) e0 else coPartitioned(e0, "dst").persist()
+    var deg = degrees(edges)
     var cores: List[DataFrame] = Nil
     for (k <- 2 to CorenessMaxK) {
-      var round = 0
-      var fixed = false
-      while (round < KcoreIters && !fixed) {
-        val dropped = deg.filter(col("deg") < k).select("node")
-        val droppedRows = dropped.count()
-        if (droppedRows == 0) {
-          fixed = true
-        } else {
-          cores ::= dropped
-            .select(col("node").as("id"), lit((k - 1).toLong).as("coreness"))
-            .localCheckpoint(false)
-          val loss = edges
-            .join(hinted(dropped.select(col("node").as("dst")), droppedRows, maxRows),
-              "dst")
-            .groupBy(col("src").as("node")).agg(count(lit(1)).as("loss"))
-          deg = deg.filter(col("deg") >= k)
-            .join(hinted(loss, droppedRows, maxRows), Seq("node"), "left")
-            .select(col("node"),
-              (col("deg") - coalesce(col("loss"), lit(0L))).as("deg"))
-            .localCheckpoint(true)
-        }
-        round += 1
-      }
+      def droppedAt(nodes: DataFrame): DataFrame =
+        nodes.select(col("node").as("id"), lit((k - 1).toLong).as("coreness"))
+          .localCheckpoint(false)
+      val (next, drops, fixed) = peelLevel(edges, deg, k, KcoreIters, maxRows)
+      deg = next
+      cores = drops.map(droppedAt) ::: cores
       // Level-boundary zero sweep: a node whose degree hits exactly 0 in
       // the level's LAST round (budget exhausted, not converged) has no
       // surviving edges, so the oracle's distinct-src-of-final-edge-set
@@ -790,9 +742,7 @@ object Iterative {
       if (!fixed) {
         val zeroed = deg.filter(col("deg") <= 0).select("node")
         if (zeroed.count() > 0) {
-          cores ::= zeroed
-            .select(col("node").as("id"), lit((k - 1).toLong).as("coreness"))
-            .localCheckpoint(false)
+          cores ::= droppedAt(zeroed)
           deg = deg.filter(col("deg") >= 1).localCheckpoint(true)
         }
       }
@@ -855,12 +805,8 @@ object Iterative {
     // distinct matters here (lineitem can repeat a part within an
     // order, and MIS counts neighbors set-wise) so this is its own
     // memo, not [[symAllDst]]'s multigraph table
-    val edges = memoEdges(spark, dir, "symAllDstDistinct") {
-      val rels = TpchGraph.relsLite(spark, dir).select("src", "dst")
-      sizedRepartition(
-        rels.unionAll(rels.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct(), col("dst"))
-    }
+    val edges = memoEdges(spark, dir, "symAllDstDistinct")(
+      coPartitioned(symmetrize(TpchGraph.relsLite(spark, dir)).distinct(), "dst"))
     val prio = Sketch.mix(pmod(col("node"), lit(Sketch.HashMod))) *
       MisIdMod + pmod(col("node"), lit(MisIdMod))
     // lazy checkpoints throughout: each round's count is the action

@@ -21,9 +21,10 @@ class Round15OpsSpec extends SparkTestBase {
     // exercising the max-vs-bit_or merge, and rho spans [1, Scale])
     val obs = spark.range(0L, 4000L, 1L, 4)
       .selectExpr("id % 500 AS node",
-        "CAST(pmod(hash(id), 64) AS INT) AS bucket",
+        "pmod(hash(id), 64L) AS bucket", // BIGINT, like production's shiftright
         s"CAST(1 + pmod(hash(id * 31 + 7), ${HyperBall.Scale}) AS INT) AS rho")
       .persist()
+    assert(obs.schema("bucket").dataType == org.apache.spark.sql.types.LongType)
     // packed path: pack each observation, bit_or-merge per node, decode
     val packed = obs.select(col("node") +: HyperBall.packCols: _*)
       .groupBy("node")

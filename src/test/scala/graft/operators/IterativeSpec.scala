@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.SparkException
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
@@ -80,5 +82,65 @@ class IterativeSpec extends SparkTestBase {
     assert(depths(1L) === 25L)  // nations
     assert(depths.contains(2L) && depths.contains(3L) && depths.contains(4L))
     assert(!depths.contains(Iterative.Unreachable)) // everything connected
+  }
+
+  test("iterateMin over a persisted, unmaterialized self-join stays at the core count") {
+    // the dedup-cluster shape: pair edges derived from a cached join
+    // that has not run yet, so its Catalyst estimate is the product of
+    // its inputs' sizes (~10^14 bytes for 3 × 3,000 rows) and nothing
+    // grounds it in real bytes
+    val t = spark.range(0L, 3000L)
+      .select(col("id").as("x"), (col("id") / 3).cast("long").as("g"))
+    val pairs = t.as("p")
+      .join(t.as("q"), col("p.g") === col("q.g") && col("p.x") < col("q.x"))
+      .join(t.as("r"), col("r.x") === col("q.x"))
+      .select(col("p.x").as("a"), col("r.x").as("b"))
+      .persist()
+    assert(pairs.queryExecution.optimizedPlan.stats.sizeInBytes >= BigInt(10).pow(13))
+    // both orientations from ONE scan: a union would double the input
+    // partitions of the stages that read it, past the core count
+    val edges = pairs.select(explode(array(
+        struct(col("a").as("src"), col("b").as("dst")),
+        struct(col("b").as("src"), col("a").as("dst")))).as("e"))
+      .select("e.*")
+    val v = edges.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label"))
+    // a stage wider than the core count cancels the run at once, so a
+    // partition count taken from the estimate fails here in seconds
+    // instead of scheduling its ~10^6 tasks
+    val sc = spark.sparkContext
+    val cap = sc.defaultParallelism
+    val group = "iterative-core-count"
+    val wide = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group) &&
+            e.stageInfo.numTasks > cap) {
+          wide.add(e.stageInfo.numTasks)
+          sc.cancelJobGroup(group)
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "iterateMin over an unmaterialized cached join")
+    val got = try {
+      Iterative.iterateMin(v, edges, 10, 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    } catch {
+      case e: SparkException => fail(s"cancelled: stages of $wide tasks (cap $cap)", e)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // reference labels: union-find over the collected pairs
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else find(p) }
+    pairs.collect().foreach { r =>
+      val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
+      parent(ra) = ra; parent(rb) = rb
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    pairs.unpersist()
+    assert(wide.isEmpty, s"stages of $wide tasks (cap $cap)")
+    assert(got.nonEmpty && got === parent.keys.map(n => n -> find(n)).toMap)
   }
 }

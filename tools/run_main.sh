@@ -3,6 +3,8 @@
 # bypasses the sbt project lock so compiles and long runs can overlap.
 # Usage: tools/run_main.sh <MainClass> [args...]
 MAIN=$1; shift
+# this checkout's classes, wherever it lives (an A/B copy runs its own)
+ROOT=$(cd "$(dirname "$0")/.." && pwd)
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -13,5 +15,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
