@@ -17,9 +17,9 @@ import graft.oracle.{Ctes, EventCtes, GenCtes, IterCtes, OlapCtes, RecordCtes, S
 object SparkEntry {
 
   /** cc_summary is a groupBy of cc_violations — share one violations
-    * DF per (session, sf dir) so the ~20 check joins run once (evicted
+    * DF per (session, sf dir) so the check runs once (evicted
     * on session end). Eagerly CHECKPOINTED rather than persisted: the
-    * ~20-branch union's logical plan re-ran Catalyst analysis on every
+    * check's logical plan (then a ~20-branch union) re-ran Catalyst analysis on every
     * read (cc_violations' suite wall was 3.0 s/run at 0.48 exec-s —
     * pure driver-side replanning ×3 runs ×2 bench core counts), while
     * a LogicalRDD re-analyzes in O(1). Input-layer memo: the cold pass

@@ -54,13 +54,6 @@ object DiffCheck {
       .filter(cols.map(c => col(s"o_$c") =!= col(s"n_$c")).reduce(_ || _))
   }
 
-  /** "old pointer must be in the tx" for one melted pointer table:
-    * ptrs(record_type, violation, id, ptr) anti-joined against the
-    * diff-id set the pointer targets. */
-  private def notUpdated(ptrs: DataFrame, targetIds: DataFrame): DataFrame =
-    ptrs.join(targetIds, col("ptr") === col("did"), "left_anti")
-      .select(col("record_type"), col("violation"), col("id").as("record_id"))
-
   /** All checkChange violations of one transaction given the old and
     * new store bundles (derives the DiffStore by snapshot join). */
   def violations(oldS: Stores, newS: Stores): DataFrame =
@@ -77,64 +70,41 @@ object DiffCheck {
     * DiffStore directly — the scale path: the diff is the (small)
     * input, never a join of two full snapshots. */
   def violationsFromDiffs(d: TxDiffs): DataFrame = {
-    // each diff table feeds 2-3 consumers (its own pointer predicates +
-    // the anti-join id sets); an eager localCheckpoint materializes the
+    // the rel and prop diffs each feed their own pointers and the
+    // anti-join's id set; an eager localCheckpoint materializes the
     // small changed-record set once instead of re-running its
     // derivation per consumer
-    val nodeDiff = d.nodes.localCheckpoint(true)
     val relDiff = d.rels.localCheckpoint(true)
     val propDiff = d.props.localCheckpoint(true)
-    val neoDiff = d.neo
-    val relDiffIds = relDiff.select(col("id").as("did"))
-    val propDiffIds = propDiff.select(col("id").as("did"))
 
-    // pointers whose old target must be a REL in the tx: node chain
-    // heads + the rel quartet, melted into one anti-join
-    val relPtrs = nodeDiff
-      .filter(col("o_next_rel") =!= col("n_next_rel") && col("o_next_rel") =!= NIL)
-      .select(lit("node").as("record_type"),
-        lit("relationship_not_updated").as("violation"),
-        col("id"), col("o_next_rel").as("ptr"))
-      .unionAll(relDiff.select(col("id"), explode(array(Seq(
-        ("source_prev", "first_prev"), ("source_next", "first_next"),
-        ("target_prev", "second_prev"), ("target_next", "second_next"))
-        .map { case (nm, c) =>
-          struct(lit(s"${nm}_not_updated").as("violation"),
-            col(s"o_$c").as("ptr"),
-            (col(s"o_$c") =!= col(s"n_$c")).as("changed"))
+    // every changed pointer's old value, with the store it targets
+    def changed(diff: DataFrame, recordType: String, ptrs: (String, String, String)*) =
+      diff.select(col("id"), explode(array(ptrs.map { case (violation, c, target) =>
+          struct(lit(violation).as("violation"), col(s"o_$c").as("ptr"),
+            lit(target).as("target_store"), (col(s"o_$c") =!= col(s"n_$c")).as("changed"))
         }: _*)).as("p"))
         .filter(col("p.changed") && col("p.ptr") =!= NIL)
-        .select(lit("relationship").as("record_type"),
-          col("p.violation").as("violation"), col("id"), col("p.ptr").as("ptr")))
+        .select(lit(recordType).as("record_type"), col("p.violation").as("violation"),
+          col("id"), col("p.ptr").as("ptr"), col("p.target_store").as("target_store"))
+    val owned = ("property_not_updated", "next_prop", "property")
+    val ptrs = changed(d.nodes, "node",
+        ("relationship_not_updated", "next_rel", "relationship"), owned)
+      .unionAll(changed(relDiff, "relationship",
+        ("source_prev_not_updated", "first_prev", "relationship"),
+        ("source_next_not_updated", "first_next", "relationship"),
+        ("target_prev_not_updated", "second_prev", "relationship"),
+        ("target_next_not_updated", "second_next", "relationship"), owned))
+      .unionAll(changed(d.neo, "neostore", owned))
+      .unionAll(changed(propDiff, "property",
+        ("prev_property_not_updated", "prev_prop", "property"),
+        ("next_property_not_updated", "next_prop", "property")))
 
-    // pointers whose old target must be a PROP in the tx: owner chain
-    // heads (node / rel / neostore) + the prop record's own prev/next
-    val propPtrs = nodeDiff
-      .filter(col("o_next_prop") =!= col("n_next_prop") && col("o_next_prop") =!= NIL)
-      .select(lit("node").as("record_type"),
-        lit("property_not_updated").as("violation"),
-        col("id"), col("o_next_prop").as("ptr"))
-      .unionAll(relDiff
-        .filter(col("o_next_prop") =!= col("n_next_prop") && col("o_next_prop") =!= NIL)
-        .select(lit("relationship").as("record_type"),
-          lit("property_not_updated").as("violation"),
-          col("id"), col("o_next_prop").as("ptr")))
-      .unionAll(neoDiff
-        .filter(col("o_next_prop") =!= col("n_next_prop") && col("o_next_prop") =!= NIL)
-        .select(lit("neostore").as("record_type"),
-          lit("property_not_updated").as("violation"),
-          col("id"), col("o_next_prop").as("ptr")))
-      .unionAll(propDiff.select(col("id"), explode(array(Seq(
-        ("prev_property", "prev_prop"), ("next_property", "next_prop"))
-        .map { case (nm, c) =>
-          struct(lit(s"${nm}_not_updated").as("violation"),
-            col(s"o_$c").as("ptr"),
-            (col(s"o_$c") =!= col(s"n_$c")).as("changed"))
-        }: _*)).as("p"))
-        .filter(col("p.changed") && col("p.ptr") =!= NIL)
-        .select(lit("property").as("record_type"),
-          col("p.violation").as("violation"), col("id"), col("p.ptr").as("ptr")))
-
-    notUpdated(relPtrs, relDiffIds).unionAll(notUpdated(propPtrs, propDiffIds))
+    // the old target must itself be in the tx: one anti-join against
+    // the tx's rel and prop ids, tagged by store
+    val txIds = relDiff.select(lit("relationship").as("store"), col("id").as("did"))
+      .unionAll(propDiff.select(lit("property").as("store"), col("id").as("did")))
+    ptrs.join(txIds, col("target_store") === col("store") && col("ptr") === col("did"),
+        "left_anti")
+      .select(col("record_type"), col("violation"), col("id").as("record_id"))
   }
 }

@@ -1,362 +1,260 @@
 package graft.checker
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.model.Stores
 
-/** Full-store consistency check as a union of join-based violation
-  * DataFrames — the Spark re-expression of the reference's FullCheck
+/** Full-store consistency check as one deferred-reference pass — the
+  * Spark re-expression of the reference's FullCheck
   * (consistency-check/.../checking/full/FullCheck.java:71-142).
   *
-  * Where the reference scans each store and *defers* reference checks
-  * until the referenced record materializes (PendingReferenceCheck,
-  * report/ConsistencyReport.java:97-98 — a hand-built join), every check
-  * here IS an equi-join on the pointer column followed by a CASE
-  * predicate; Catalyst plans the dimension joins (type/key dictionaries)
-  * as broadcasts (reference CacheSmallStoresRecordAccess.java:30-90) and
-  * the store-to-store joins as shuffle joins, which is the reference's
-  * MultiPassStore id-range partitioning (MultiPassStore.java:24-230)
-  * done by the engine.
+  * The reference scans each store once and *defers* every reference
+  * check until the referenced record is read (PendingReferenceCheck,
+  * report/ConsistencyReport.java:97-98), so it meets each pointer with
+  * its target once and not once per pointer kind. The same shape here:
+  * every store is scanned once and melted into rows keyed by the record
+  * they concern, `(store, id)`:
+  *
+  *  - a record row per record of a store a pointer can reach, not-in-use
+  *    records included — the target side;
+  *  - a pointer row per outgoing pointer, keyed by its target, carrying
+  *    `(src_type, src_id, field, node, prev)`;
+  *  - a claim row per chain head an owner or block claims, and a head row
+  *    per candidate chain head;
+  *  - a row per violation of a record's own scan predicates.
+  *
+  * One shuffle on `(store, id)` brings each pointer together with every
+  * record of its key — a pointer whose key has no record meets none, so
+  * the pairs are exactly a left join's rows — and one CASE per `field`
+  * checks it. Claims and heads are counted over the same key.
   *
   * Output schema: (record_type, violation, record_id) — one row per
   * violated predicate, summarized by [[summary]] like the reference's
   * ConsistencySummaryStatistics (A1).
   *
-  * Violation predicates per join (SURVEY.md §2.3):
-  *  J1 node→first-rel       (NodeRecordCheck.java:42-77)
-  *  J2 rel→type dictionary  (RelationshipRecordCheck.java:39-81)
-  *  J3 rel→endpoint nodes   (RelationshipNodeField.java:33-147)
-  *  J4 rel→prev/next ×4     (RelationshipRecordCheck.java:83-285)
-  *  J5 node→prop chain head (PrimitiveRecordCheck.java:34-139)
-  *  J6 prop→prev/next       (PropertyRecordCheck.java:168-226)
-  *  J7 block→key dictionary (PropertyRecordCheck.java:129-137)
-  *  J8 block→dynamic chain  (PropertyRecordCheck.java:139-162)
-  *  J9 dynamic→next + range (DynamicRecordCheck.java:62-108)
-  *  J10 dictionary→name     (NameRecordCheck.java:40-66)
-  *  J13/J14 duplicate owners (OwnerCheck.java:59-430 — groupBy, not a
-  *    shared concurrent map)
-  *  J15 orphan chains        (OwnerCheck.scanForOrphanChains:81-117 —
-  *    anti-join)
+  * Checks and where they run (SURVEY.md §2.3):
+  *  J1  node→first rel       field `next_rel`      (NodeRecordCheck.java:42-77)
+  *  J2  rel→type dictionary  field `type`          (RelationshipRecordCheck.java:39-81)
+  *  J3  rel→endpoint nodes   fields `source`, `target` (RelationshipNodeField.java:33-147)
+  *  J4  rel→prev/next ×4     fields `source_prev`, `source_next`, `target_prev`,
+  *                           `target_next`        (RelationshipRecordCheck.java:83-285)
+  *  J5  owner→prop chain     field `next_prop`, from node, rel and neostore
+  *                           (PrimitiveRecordCheck.java:34-139, NeoStoreCheck.java:25)
+  *  J6  prop→prev/next       fields `prev`, `next` (PropertyRecordCheck.java:168-226)
+  *  J7  block→key dictionary field `key`           (PropertyRecordCheck.java:129-137)
+  *  J8  block→dynamic chain  fields `string`, `array`, each into its own store
+  *                           (PropertyRecordCheck.java:139-162,
+  *                           ConsistencyReport.java:359-373)
+  *  J9  dynamic→next         field `next_block`; its length-range rules are
+  *                           scan predicates   (DynamicRecordCheck.java:62-108)
+  *  J10 dictionary→name      field `name`          (NameRecordCheck.java:40-66)
+  *  P3  block type validity  scan predicate        (PropertyRecordCheck.java:139-160)
+  *  J13/J14 duplicate owners: a key claimed more than once, counted over
+  *      the J5/J8 claims (OwnerCheck.java:59-430)
+  *  J15 orphan chains: a head row whose key nobody claims
+  *      (OwnerCheck.scanForOrphanChains:81-117)
   */
 object FullCheck {
+  import graft.model.RecordSpec.{BlockSize, TLong, TDouble, TShortString, TLongString, TArray}
+
   private val NIL = -1L
 
-  private def viol(df: DataFrame, recordType: String, idCol: String = "id"): DataFrame =
-    df.filter(col("violation").isNotNull)
-      .select(lit(recordType).as("record_type"), col("violation"),
-        col(idCol).as("record_id"))
+  /** The full-check "task list" (FullCheck.java:90-125) grouped into the
+    * reference's per-store-scan phases (JsonReportWriter.java:115-124). */
+  private val PhaseNames: Seq[String] = Seq("node_store", "rel_store", "prop_store",
+    "string_store", "array_store", "prop_keys", "rel_types", "owners")
 
-  /** J1: each in-use node's next_rel must head an in-use relationship
-    * chain that references the node back. */
-  def nodeFirstRel(s: Stores): DataFrame = {
-    val r = s.rels.select(col("id").as("r_id"), col("in_use").as("r_in_use"),
-      col("first_node"), col("second_node"),
-      col("first_prev"), col("second_prev"))
-    viol(s.nodes.filter(col("in_use") && col("next_rel") =!= NIL)
-      .join(r, col("next_rel") === col("r_id"), "left")
-      .withColumn("violation",
-        when(col("r_id").isNull || !col("r_in_use"), "relationship_not_in_use")
-          .when(col("first_node") =!= col("id") && col("second_node") =!= col("id"),
-            "relationship_for_other_node")
-          .when((col("first_node") === col("id") && col("first_prev") =!= NIL) ||
-                (col("second_node") === col("id") && col("second_prev") =!= NIL),
-            "relationship_not_first_in_chain")),
-      "node")
+  /** what a pointer's check reads of the record it reaches */
+  private val RecType = StructType(StructField("in_use", BooleanType) +:
+    Seq("next_rel", "first_node", "second_node", "first_prev", "first_next",
+      "second_prev", "second_next", "prev_prop", "next_prop", "length")
+      .map(StructField(_, LongType)))
+  private val PtrType = StructType(Seq(StructField("src_type", StringType),
+    StructField("src_id", LongType), StructField("field", StringType),
+    StructField("node", LongType), StructField("prev", LongType)))
+
+  /** One melted row of a store's record: keyed by `(store, id)`, emitted
+    * where `keep` holds, in the slice of `phase`. */
+  private final case class Keyed(phase: String, store: String, id: Column, keep: Column,
+      rec: Column = lit(null).cast(RecType), ptr: Column = lit(null).cast(PtrType),
+      claim: Boolean = false, head: Boolean = false,
+      own: Column = lit(null).cast(StringType)) {
+    def column: Column = struct(lit(store).as("store"), id.cast(LongType).as("id"),
+      keep.as("keep"), rec.as("rec"), ptr.as("ptr"), lit(claim).as("claim"),
+      lit(head).as("head"), own.as("own"))
   }
 
-  /** J2: relationship type must exist in the dictionary (broadcast). */
-  def relLabel(s: Stores): DataFrame = {
-    val t = broadcast(s.relTypes.select(col("id").as("t_id"), col("in_use").as("t_in_use")))
-    viol(s.rels.filter(col("in_use"))
-      .join(t, col("type_id") === col("t_id"), "left")
-      .withColumn("violation",
-        when(col("t_id").isNull || !col("t_in_use"), "label_not_in_use")),
-      "relationship")
+  /** Every row each store melts into, by store. */
+  private def melt(s: Stores): Seq[(DataFrame, Seq[Keyed])] = {
+    val used = col("in_use")
+    def set(c: String) = used && col(c) =!= NIL
+    def record(df: DataFrame, store: String) = Keyed("", store, col("id"), col("id").isNotNull,
+      rec = struct(RecType.fields.toSeq.map(f =>
+        (if (df.columns.contains(f.name)) col(f.name) else lit(null)).cast(f.dataType).as(f.name)): _*))
+    def ptr(phase: String, srcType: String, srcId: String, field: String, target: String,
+        targetId: String, keep: Column, node: Column = lit(null), prev: Column = lit(null)) =
+      Keyed(phase, target, col(targetId), keep, ptr = struct(lit(srcType).as("src_type"),
+        col(srcId).cast(LongType).as("src_id"), lit(field).as("field"),
+        node.cast(LongType).as("node"), prev.cast(LongType).as("prev")))
+    def chain(nm: String, c: String, node: String) =
+      ptr("rel_store", "relationship", "id", nm, "relationship", c, set(c), node = col(node))
+    // J5 and its J13/J15 claim, from one owner kind
+    def owner(srcType: String) = Seq(
+      ptr("prop_store", srcType, "id", "next_prop", "property", "next_prop", set("next_prop")),
+      Keyed("owners", "property", col("next_prop"), set("next_prop"), claim = true))
+    // J8 and its J14/J15 claim, for one dynamic store
+    def block(phase: String, kind: String, ptype: Int) = Seq(
+      ptr(phase, "property", "prop_id", kind, kind, "value_ref", col("ptype") === ptype),
+      Keyed("owners", kind, col("value_ref"), col("ptype") === ptype, claim = true))
+    // a record's own scan predicate, kept where it fires
+    def rule(phase: String, store: String, id: String, keep: Column, v: Column) =
+      Keyed(phase, store, col(id), keep && v.isNotNull, own = v)
+    // J9: next pointer plus the record's own length rules
+    def dynamic(df: DataFrame, phase: String, store: String, more: Keyed*) = df -> (Seq(
+      record(df, store),
+      ptr(phase, store, "id", "next_block", store, "next_block", set("next_block")),
+      rule(phase, store, "id", used,
+        when(col("length") <= 0 || col("length") > BlockSize, "invalid_length")
+          .when(col("length") < BlockSize && col("next_block") =!= NIL,
+            "record_not_full_references_next"))) ++ more)
+    def dictionary(df: DataFrame, phase: String, store: String, names: String) = df -> Seq(
+      record(df, store),
+      ptr(phase, store, "id", "name", names, "name_id", used))
+    val dynHead = used && col("id") % 8 === 0
+    Seq(
+      s.nodes -> (Seq(record(s.nodes, "node"),
+        ptr("node_store", "node", "id", "next_rel", "relationship", "next_rel", set("next_rel"))) ++
+        owner("node")),
+      s.rels -> (Seq(record(s.rels, "relationship"),
+        ptr("rel_store", "relationship", "id", "type", "label", "type_id", used),
+        ptr("rel_store", "relationship", "id", "source", "node", "first_node", used,
+          prev = col("first_prev")),
+        ptr("rel_store", "relationship", "id", "target", "node", "second_node", used,
+          prev = col("second_prev")),
+        chain("source_prev", "first_prev", "first_node"),
+        chain("source_next", "first_next", "first_node"),
+        chain("target_prev", "second_prev", "second_node"),
+        chain("target_next", "second_next", "second_node")) ++
+        owner("relationship")),
+      s.neo -> owner("neostore"),
+      s.props -> Seq(record(s.props, "property"),
+        ptr("prop_store", "property", "id", "prev", "property", "prev_prop", set("prev_prop")),
+        ptr("prop_store", "property", "id", "next", "property", "next_prop", set("next_prop")),
+        Keyed("owners", "property", col("id"), used && col("prev_prop") === NIL, head = true)),
+      s.blocks -> (Seq(
+        ptr("prop_keys", "property", "prop_id", "key", "key", "key_id", lit(true)),
+        rule("prop_store", "property", "prop_id", lit(true),
+          when(!col("ptype").isin(TLong, TDouble, TShortString, TLongString, TArray),
+            "invalid_property_value"))) ++
+        block("string_store", "string", TLongString) ++ block("array_store", "array", TArray)),
+      dynamic(s.dyns, "string_store", "string",
+        Keyed("owners", "string", col("id"), dynHead, head = true)),
+      dynamic(s.arrays, "array_store", "array",
+        Keyed("owners", "array", col("id"), dynHead, head = true)),
+      dictionary(s.relTypes, "rel_types", "label", "label_name"),
+      dictionary(s.propKeys, "prop_keys", "key", "key_name"),
+      dynamic(s.typeNames, "rel_types", "label_name"),
+      dynamic(s.keyNames, "prop_keys", "key_name"))
   }
 
-  /** J3: both endpoint nodes in use; chain heads referenced back.
-    * Both sides are melted into one (rel, side) long table before a
-    * single join against the node store: two per-side joins would
-    * shuffle the full rel store twice for the same probe volume. */
-  def relEndpoints(s: Stores): DataFrame = {
-    val n = s.nodes.select(col("id").as("n_id"), col("in_use").as("n_in_use"),
-      col("next_rel").as("n_next_rel"))
-    val sides = s.rels.filter(col("in_use"))
-      .select(col("id"), explode(array(
-        struct(lit("source").as("nm"), col("first_node").as("node"),
-          col("first_prev").as("prev")),
-        struct(lit("target").as("nm"), col("second_node").as("node"),
-          col("second_prev").as("prev")))).as("p"))
-      .select(col("id"), col("p.nm").as("nm"), col("p.node").as("node"),
-        col("p.prev").as("prev"))
-    viol(sides
-      .join(n, col("node") === col("n_id"), "left")
-      .withColumn("violation",
-        when(col("n_id").isNull || !col("n_in_use"),
-          concat(col("nm"), lit("_node_not_in_use")))
-          .when(col("prev") === NIL && col("n_next_rel") === NIL,
-            concat(col("nm"), lit("_node_has_no_relationships")))
-          .when(col("prev") === NIL && col("n_next_rel") =!= col("id"),
-            concat(col("nm"), lit("_node_does_not_reference_back")))),
-      "relationship")
+  /** The rows of the phases in `only`, one scan per store. Record rows
+    * ride along whenever a pointer may need them. */
+  private def rows(s: Stores, only: Set[String]): DataFrame = {
+    val wanted = (r: Keyed) => only(r.phase) || (r.phase.isEmpty && only.exists(_ != "owners"))
+    melt(s).collect { case (df, rs) if rs.exists(wanted) =>
+      df.select(explode(array(rs.filter(wanted).map(_.column): _*)).as("r"))
+        .filter(col("r.keep")).select("r.*").drop("keep")
+    }.reduce(_ unionAll _)
   }
 
-  /** J4 ×4: every chain pointer must reach an in-use relationship that
-    * shares the endpoint node and points back. prev-pointers are
-    * reciprocated by the referenced rel's *next* on the shared node's
-    * side, and vice versa (RelationshipRecordCheck.java:221-284). */
-  def relChains(s: Stores): DataFrame = {
-    val o = s.rels.select(col("id").as("o_id"), col("in_use").as("o_in_use"),
-      col("first_node").as("o_first"), col("second_node").as("o_second"),
-      col("first_prev").as("o_fp"), col("first_next").as("o_fn"),
-      col("second_prev").as("o_sp"), col("second_next").as("o_sn"))
-    // melt the four chain pointers into one (rel, pointer) long table —
-    // a single shuffle join against the rel store instead of four; the
-    // per-pointer predicates become one CASE over (nm, back_is_next)
-    val ptrs = s.rels.filter(col("in_use"))
-      .select(col("id"), explode(array(
-        struct(lit("source_prev").as("nm"), col("first_prev").as("ptr"),
-          col("first_node").as("node"), lit(true).as("back_is_next")),
-        struct(lit("source_next").as("nm"), col("first_next").as("ptr"),
-          col("first_node").as("node"), lit(false).as("back_is_next")),
-        struct(lit("target_prev").as("nm"), col("second_prev").as("ptr"),
-          col("second_node").as("node"), lit(true).as("back_is_next")),
-        struct(lit("target_next").as("nm"), col("second_next").as("ptr"),
-          col("second_node").as("node"), lit(false).as("back_is_next")))).as("p"))
-      .select(col("id"), col("p.nm").as("nm"), col("p.ptr").as("ptr"),
-        col("p.node").as("node"), col("p.back_is_next").as("back_is_next"))
-      .filter(col("ptr") =!= NIL)
-    val back =
-      when(col("o_first") === col("node"),
-        when(col("back_is_next"), col("o_fn")).otherwise(col("o_fp")))
-        .when(col("o_second") === col("node"),
-          when(col("back_is_next"), col("o_sn")).otherwise(col("o_sp")))
-    viol(ptrs
-      .join(o, col("ptr") === col("o_id"), "left")
-      .withColumn("violation",
-        when(col("o_id").isNull || !col("o_in_use"),
-          concat(col("nm"), lit("_not_in_use")))
-          .when(back.isNull, concat(col("nm"), lit("_references_other_node")))
-          .when(back =!= col("id"),
-            concat(col("nm"), lit("_does_not_reference_back")))),
-      "relationship")
+  /** The violation of one pointer row against one record of its key
+    * (`r`, null when the key has none). */
+  private def reference: Column = {
+    val field = col("ptr.field")
+    val src = col("ptr.src_id")
+    def r(c: String) = col(s"r.$c")
+    val missing = col("r").isNull || !r("in_use")
+    def named(suffix: String) = concat(field, lit(suffix))
+    // J4: a prev pointer is reciprocated by the target's next on the
+    // shared endpoint's side, and vice versa
+    val relBack =
+      when(r("first_node") === col("ptr.node"),
+        when(field.endsWith("_prev"), r("first_next")).otherwise(r("first_prev")))
+        .when(r("second_node") === col("ptr.node"),
+          when(field.endsWith("_prev"), r("second_next")).otherwise(r("second_prev")))
+    val propBack = when(field === "prev", r("next_prop")).otherwise(r("prev_prop"))
+    when(field === "next_rel",
+      when(missing, "relationship_not_in_use")
+        .when(r("first_node") =!= src && r("second_node") =!= src,
+          "relationship_for_other_node")
+        .when((r("first_node") === src && r("first_prev") =!= NIL) ||
+              (r("second_node") === src && r("second_prev") =!= NIL),
+          "relationship_not_first_in_chain"))
+      .when(field === "type", when(missing, "label_not_in_use"))
+      .when(field.isin("source", "target"),
+        when(missing, named("_node_not_in_use"))
+          .when(col("ptr.prev") === NIL && r("next_rel") === NIL,
+            named("_node_has_no_relationships"))
+          .when(col("ptr.prev") === NIL && r("next_rel") =!= src,
+            named("_node_does_not_reference_back")))
+      .when(field.isin("source_prev", "source_next", "target_prev", "target_next"),
+        when(missing, named("_not_in_use"))
+          .when(relBack.isNull, named("_references_other_node"))
+          .when(relBack =!= src, named("_does_not_reference_back")))
+      .when(field === "next_prop",
+        when(missing, "property_not_in_use")
+          .when(r("prev_prop") =!= NIL, "property_not_first_in_chain"))
+      .when(field.isin("prev", "next"),
+        when(missing, named("_not_in_use"))
+          .when(propBack =!= src, named("_does_not_reference_back")))
+      .when(field === "key", when(missing, "key_not_in_use"))
+      .when(field.isin("string", "array"),
+        when(missing, named("_not_in_use"))
+          .when(r("length") <= 0, named("_empty")))
+      .when(field === "next_block",
+        when(col("id") === src, "self_reference")
+          .when(missing, "next_block_not_in_use")
+          .when(r("length") <= 0, "next_block_empty"))
+      .when(field === "name",
+        when(missing, "name_block_not_in_use")
+          .when(r("length") <= 0, "empty_name"))
   }
 
-  /** All property-owning primitives melted into one
-    * (record_type, id, in_use, next_prop) table — the reference runs
-    * ONE shared PrimitiveRecordCheck over nodes, relationships and the
-    * NeoStore record (PrimitiveRecordCheck.java:34, NeoStoreCheck.java:25);
-    * here the same sharing is a union feeding a single join. */
-  private def propOwners(s: Stores): DataFrame =
-    s.nodes.select(lit("node").as("record_type"), col("id"),
-        col("in_use"), col("next_prop"))
-      .unionAll(s.rels.select(lit("relationship").as("record_type"), col("id"),
-        col("in_use"), col("next_prop")))
-      .unionAll(s.neo.select(lit("neostore").as("record_type"), col("id"),
-        col("in_use"), col("next_prop")))
-
-  /** J5: each in-use owner's next_prop must head an in-use property
-    * chain — one join for all three owner kinds. */
-  def ownerPropChain(s: Stores): DataFrame = {
-    val p = s.props.select(col("id").as("p_id"), col("in_use").as("p_in_use"),
-      col("prev_prop").as("p_prev"))
-    propOwners(s).filter(col("in_use") && col("next_prop") =!= NIL)
-      .join(p, col("next_prop") === col("p_id"), "left")
-      .withColumn("violation",
-        when(col("p_id").isNull || !col("p_in_use"), "property_not_in_use")
-          .when(col("p_prev") =!= NIL, "property_not_first_in_chain"))
-      .filter(col("violation").isNotNull)
-      .select(col("record_type"), col("violation"), col("id").as("record_id"))
+  /** The violations of the phases in `only`. Within a key, the claim rows
+    * sort first, so the first row carries the key's one multiple_owners;
+    * each head row whose key nobody claims is an orphan (a null id is
+    * never claimed, like an anti-join's null key). */
+  private def check(s: Stores, only: Set[String]): DataFrame = {
+    val key = Window.partitionBy("id", "store").orderBy(col("claim").desc)
+    val whole = key.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    rows(s, only)
+      .select(col("*"), collect_list("rec").over(whole).as("recs"),
+        count_if(col("claim")).over(whole).as("claims"), row_number().over(key).as("rank"))
+      .filter(col("rec").isNull)
+      .select(col("*"), explode_outer(when(col("ptr").isNotNull, col("recs"))).as("r"))
+      // the CASE runs once: a filter on its result would be pushed below
+      // the projection and run it twice
+      .select(
+        when(col("ptr").isNotNull, col("ptr.src_type")).otherwise(col("store")).as("record_type"),
+        explode(array_compact(array(when(col("ptr").isNotNull, reference)
+          .when(col("own").isNotNull, col("own"))
+          .when(col("head") && (col("claims") === 0 || col("id").isNull), "orphan_chain")
+          .when(col("claim") && col("rank") === 1 && col("claims") > 1, "multiple_owners"))))
+          .as("violation"),
+        when(col("ptr").isNotNull, col("ptr.src_id")).otherwise(col("id")).as("record_id"))
   }
 
-  /** J6: property chain pointers resolve and reciprocate — both
-    * pointers melted into one join like [[relChains]]. */
-  def propChains(s: Stores): DataFrame = {
-    val o = s.props.select(col("id").as("o_id"), col("in_use").as("o_in_use"),
-      col("prev_prop").as("o_prev"), col("next_prop").as("o_next"))
-    val ptrs = s.props.filter(col("in_use"))
-      .select(col("id"), explode(array(
-        struct(lit("prev").as("nm"), col("prev_prop").as("ptr"),
-          lit(true).as("back_is_next")),
-        struct(lit("next").as("nm"), col("next_prop").as("ptr"),
-          lit(false).as("back_is_next")))).as("p"))
-      .select(col("id"), col("p.nm").as("nm"), col("p.ptr").as("ptr"),
-        col("p.back_is_next").as("back_is_next"))
-      .filter(col("ptr") =!= NIL)
-    val back = when(col("back_is_next"), col("o_next")).otherwise(col("o_prev"))
-    viol(ptrs
-      .join(o, col("ptr") === col("o_id"), "left")
-      .withColumn("violation",
-        when(col("o_id").isNull || !col("o_in_use"),
-          concat(col("nm"), lit("_not_in_use")))
-          .when(back =!= col("id"),
-            concat(col("nm"), lit("_does_not_reference_back")))),
-      "property")
-  }
+  /** All checks in one plan. */
+  def violations(s: Stores): DataFrame = check(s, PhaseNames.toSet)
 
-  /** J7: every block's key must exist in the dictionary (broadcast). */
-  def blockKeys(s: Stores): DataFrame = {
-    val k = broadcast(s.propKeys.select(col("id").as("k_id"), col("in_use").as("k_in_use")))
-    viol(s.blocks
-      .join(k, col("key_id") === col("k_id"), "left")
-      .withColumn("violation",
-        when(col("k_id").isNull || !col("k_in_use"), "key_not_in_use")),
-      "property", "prop_id")
-  }
-
-  /** J8: long-string / array blocks reference an in-use, non-empty
-    * chain in their OWN dynamic store (the reference follows
-    * STRING_PROPERTY and ARRAY_PROPERTY blocks into separate stores —
-    * PropertyRecordCheck.java:139-162, arrayNotInUse
-    * ConsistencyReport.java:359-373). */
-  private def blockDynamic(s: Stores, ptypeCode: Int, store: DataFrame,
-      kind: String): DataFrame = {
-    val d = store.select(col("id").as("d_id"), col("in_use").as("d_in_use"),
-      col("length").as("d_len"))
-    viol(s.blocks.filter(col("ptype") === ptypeCode)
-      .join(d, col("value_ref") === col("d_id"), "left")
-      .withColumn("violation",
-        when(col("d_id").isNull || !col("d_in_use"), s"${kind}_not_in_use")
-          .when(col("d_len") <= 0, s"${kind}_empty")),
-      "property", "prop_id")
-  }
-
-  def blockStrings(s: Stores): DataFrame =
-    blockDynamic(s, 4, s.dyns, "string")
-
-  def blockArrays(s: Stores): DataFrame =
-    blockDynamic(s, 5, s.arrays, "array")
-
-  /** P3 type-validity: every block's ptype must be a known PropertyType
-    * — the reference validates forceGetType() non-null and the inlined
-    * value's type per block (PropertyRecordCheck.java:139-160,
-    * `invalidPropertyValue`); a junk type code means the value is
-    * unreadable. Pure scan predicate, no join. */
-  def blockTypes(s: Stores): DataFrame = {
-    import graft.model.RecordSpec.{TLong, TDouble, TShortString, TLongString, TArray}
-    viol(s.blocks.withColumn("violation",
-      when(!col("ptype").isin(TLong, TDouble, TShortString, TLongString, TArray),
-        "invalid_property_value")),
-      "property", "prop_id")
-  }
-
-  /** J9: dynamic record invariants — length range, full-if-chained,
-    * self-reference, next in use and non-empty. */
-  def dynamics(df: DataFrame, recordType: String, blockSize: Int): DataFrame = {
-    val recordLevel = viol(df.filter(col("in_use"))
-      .withColumn("violation",
-        when(col("length") <= 0 || col("length") > blockSize, "invalid_length")
-          .when(col("length") < blockSize && col("next_block") =!= NIL,
-            "record_not_full_references_next")),
-      recordType)
-    val o = df.select(col("id").as("o_id"), col("in_use").as("o_in_use"),
-      col("length").as("o_len"))
-    val pointerLevel = viol(df.filter(col("in_use") && col("next_block") =!= NIL)
-      .withColumn("violation0",
-        when(col("next_block") === col("id"), "self_reference"))
-      .join(o, col("next_block") === col("o_id"), "left")
-      .withColumn("violation",
-        when(col("violation0").isNotNull, col("violation0"))
-          .when(col("o_id").isNull || !col("o_in_use"), "next_block_not_in_use")
-          .when(col("o_len") <= 0, "next_block_empty")),
-      recordType)
-    recordLevel.unionAll(pointerLevel)
-  }
-
-  /** J10: dictionary entries' name chains resolve, in use, non-empty. */
-  def dictNames(dict: DataFrame, names: DataFrame, recordType: String): DataFrame = {
-    val n = broadcast(names.select(col("id").as("nm_id"), col("in_use").as("nm_in_use"),
-      col("length").as("nm_len")))
-    viol(dict.filter(col("in_use"))
-      .join(n, col("name_id") === col("nm_id"), "left")
-      .withColumn("violation",
-        when(col("nm_id").isNull || !col("nm_in_use"), "name_block_not_in_use")
-          .when(col("nm_len") <= 0, "empty_name")),
-      recordType)
-  }
-
-  /** J13: two in-use owners claiming the same property chain head —
-    * a groupBy over claimed heads across ALL owner kinds (node, rel,
-    * neostore), not the reference's shared ConcurrentMap
-    * (OwnerCheck.java:61 populates one map from every primitive). */
-  def duplicatePropOwners(s: Stores): DataFrame = {
-    propOwners(s).filter(col("in_use") && col("next_prop") =!= NIL)
-      .groupBy(col("next_prop").as("record_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .select(lit("property").as("record_type"),
-        lit("multiple_owners").as("violation"), col("record_id"))
-  }
-
-  /** J14: two blocks claiming the same dynamic chain head — per
-    * dynamic store (string blocks vs array blocks,
-    * ConsistencyReport.java:359-373). */
-  private def dupDynOwners(s: Stores, ptypeCode: Int, kind: String): DataFrame =
-    s.blocks.filter(col("ptype") === ptypeCode)
-      .groupBy(col("value_ref").as("record_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .select(lit(kind).as("record_type"),
-        lit("multiple_owners").as("violation"), col("record_id"))
-
-  def duplicateDynOwners(s: Stores): DataFrame =
-    dupDynOwners(s, 4, "string").unionAll(dupDynOwners(s, 5, "array"))
-
-  /** J15: chain heads never claimed by any owner — anti-joins over the
-    * union of owner kinds (props) and per-store block claims (string /
-    * array chains). Chain heads in the dynamic stores are multiples of
-    * 8 by the value_ref arithmetic. */
-  def orphans(s: Stores): DataFrame = {
-    val claimedProps = propOwners(s).filter(col("in_use"))
-      .select(col("next_prop").as("head"))
-    val orphanProps = s.props
-      .filter(col("in_use") && col("prev_prop") === NIL)
-      .join(claimedProps, col("id") === col("head"), "left_anti")
-      .select(lit("property").as("record_type"),
-        lit("orphan_chain").as("violation"), col("id").as("record_id"))
-    def orphanDyn(store: DataFrame, ptypeCode: Int, kind: String): DataFrame = {
-      val claimed = s.blocks.filter(col("ptype") === ptypeCode)
-        .select(col("value_ref").as("head"))
-      store
-        .filter(col("in_use") && col("id") % 8 === 0)
-        .join(claimed, col("id") === col("head"), "left_anti")
-        .select(lit(kind).as("record_type"),
-          lit("orphan_chain").as("violation"), col("id").as("record_id"))
-    }
-    orphanProps
-      .unionAll(orphanDyn(s.dyns, 4, "string"))
-      .unionAll(orphanDyn(s.arrays, 5, "array"))
-  }
-
-  /** The full-check "task list" (FullCheck.java:90-125) grouped into
-    * the reference's per-store-scan phases — the shape its JSON report
-    * times one entry per task (JsonReportWriter.java:115-124;
-    * TimingProgress.java:29-150). [[violations]] unions them into one
-    * declarative plan; [[graft.checker.ScaleCheck]] times each phase
-    * separately for the phase-by-phase records/s table. */
-  def phases(s: Stores): Seq[(String, DataFrame)] = Seq(
-    "node_store" -> nodeFirstRel(s),
-    "rel_store" -> relLabel(s)
-      .unionAll(relEndpoints(s))
-      .unionAll(relChains(s)),
-    "prop_store" -> ownerPropChain(s)
-      .unionAll(propChains(s))
-      .unionAll(blockTypes(s)),
-    "string_store" -> blockStrings(s)
-      .unionAll(dynamics(s.dyns, "string", graft.model.RecordSpec.BlockSize)),
-    "array_store" -> blockArrays(s)
-      .unionAll(dynamics(s.arrays, "array", graft.model.RecordSpec.BlockSize)),
-    "prop_keys" -> blockKeys(s)
-      .unionAll(dynamics(s.keyNames, "key_name", graft.model.RecordSpec.BlockSize))
-      .unionAll(dictNames(s.propKeys, s.keyNames, "key")),
-    "rel_types" -> dynamics(s.typeNames, "label_name", graft.model.RecordSpec.BlockSize)
-      .unionAll(dictNames(s.relTypes, s.typeNames, "label")),
-    "owners" -> duplicatePropOwners(s)
-      .unionAll(duplicateDynOwners(s))
-      .unionAll(orphans(s)))
-
-  /** All checks unioned: one plan, identical branch set to [[phases]]. */
-  def violations(s: Stores): DataFrame =
-    phases(s).map(_._2).reduce(_ unionAll _)
+  /** [[violations]] sliced by phase, for timing each phase alone: each
+    * slice melts only its own rows; together they are exactly
+    * [[violations]]. */
+  def phases(s: Stores): Seq[(String, DataFrame)] =
+    PhaseNames.map(n => n -> check(s, Set(n)))
 
   /** A1: per-(record type, violation) summary
     * (ConsistencySummaryStatistics). */

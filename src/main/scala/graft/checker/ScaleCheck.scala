@@ -22,10 +22,10 @@ import graft.operators.DataGen
   *
   * Scale shape: generation is pure column arithmetic over `range()`
   * (no shuffle); store derivation shuffles once per chain family
-  * (incidence window keyed by node id); the check is the same ~20-join
-  * union the TPC-H twin runs, against MEMORY_AND_DISK-persisted stores
-  * so union branches share one materialization without pinning ~180M
-  * rows in heap.
+  * (incidence window keyed by node id); the check is the same
+  * one-shuffle plan the TPC-H twin runs, against MEMORY_AND_DISK-persisted
+  * stores so the check and its phase slices share one materialization
+  * without pinning ~180M rows in heap.
   */
 object ScaleCheck {
   import RecordSpec._
@@ -89,8 +89,8 @@ object ScaleCheck {
   }
 
   /** Session-memoized, checkpoint-truncated stores for the small-n
-    * oracle query: profile()'s 7 count branches plus the ~20 check
-    * branches would otherwise re-derive (and re-ANALYZE) the whole
+    * oracle query: profile()'s 7 count branches plus the check's store
+    * scans would otherwise re-derive (and re-ANALYZE) the whole
     * assembly once per union branch — measured 8.7 s at n=2000 where
     * the data itself is trivial. Same pattern as
     * RecordStores.deriveCached; eager localCheckpoint is fine at this
@@ -108,7 +108,7 @@ object ScaleCheck {
     }
 
   /** The 7-row profile is a pure function of (session, n) but its
-    * violations branch re-runs the whole ~20-union-branch FullCheck
+    * violations branch re-runs the whole FullCheck
     * over the generated stores on EVERY touch — 83 warm exec-s for a
     * 7-row output in the r10 artifact (the round's largest
     * unattributed regression was this recomputation meeting box
@@ -164,8 +164,8 @@ object ScaleCheck {
     })
     // taps in call order: nodesSlim, rels1, rows, incidence. Fill the
     // independent chains concurrently (nodesSlim feeds rows; rels1
-    // feeds incidence), then materialize the six stores so the ~20
-    // union-branch checks share one copy.
+    // feeds incidence), then materialize the six stores so the check
+    // and its phase slices share one copy.
     val Seq(nodesSlim, rels1, rows, incPN) = taps.toSeq
     Await.result(Future.sequence(Seq(
       Future { nodesSlim.count(); rows.count() },
@@ -195,9 +195,10 @@ object ScaleCheck {
     val storeRows = stored.map { case (nm, _, c) => s""""$nm":$c""" }.mkString(",")
     // Per-phase timings, mirroring the reference's one-report-entry-per
     // -store-scan-task shape (JsonReportWriter.java:115-124 computes
-    // recordsPerSecond per TimingProgress task). Each phase re-counts
-    // its own union branch over the persisted stores, so phase walls
-    // sum to ≈ the single-plan check_sec plus per-job overhead; the
+    // recordsPerSecond per TimingProgress task). Each phase counts its
+    // own slice of the one plan over the persisted stores, so phase
+    // walls sum to more than the single-plan check_sec (each slice pays
+    // the plan's jobs and its record rows); the
     // records basis is the phase's primary scanned store, like the
     // reference's per-task elementCount.
     val countByName = stored.map { case (nm, _, c) => nm -> c }.toMap

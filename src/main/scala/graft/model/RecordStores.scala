@@ -150,14 +150,13 @@ final case class Stores(
   typeNames: DataFrame, // id, in_use, length, next_block
   keyNames: DataFrame   // id, in_use, length, next_block
 ) {
-  /** Persist every store. The full check unions ~20 join branches
-    * over the same stores and Spark does not dedupe common subtrees
-    * across union branches — an unpersisted bundle (e.g. a freshly
-    * restored backup) is otherwise re-read once per branch. */
+  /** Persist every store. A store read by several plans (the full
+    * check, its phase slices, a summary) is otherwise re-read from its
+    * source by each — e.g. a freshly restored backup's parquet. */
   def persistAll(): Stores = {
     // collect-then-foreach: Iterator.collect alone is LAZY — a bare
     // `collect { case d => d.persist() }` never runs the side effect
-    // (the restored bundle then re-reads parquet once per check branch)
+    // (the restored bundle then re-reads parquet once per check)
     productIterator.collect { case d: DataFrame => d }.foreach(_.persist())
     this
   }
@@ -170,11 +169,11 @@ final case class Stores(
 object RecordStores {
   import RecordSpec._
 
-  /** Memoized, persisted derivation: the full check unions ~20
-    * join-based checks over the same five stores, and Spark does not
-    * dedupe common subtrees across union branches — without persistence
-    * the derivation would execute once PER BRANCH. One cached
-    * derivation per sf dir (dimension stores are literal, no need). */
+  /** Memoized, persisted derivation: the full check, the oracle-gated
+    * checker queries and the backup queries all read the same five
+    * stores — without persistence the derivation would execute once
+    * PER READER. One cached derivation per sf dir (dimension stores are
+    * literal, no need). */
   private val cached = new graft.SessionMemo[Stores]
   private def slog(msg: => String): Unit =
     if (sys.env.contains("GRAFT_ITER_LOG"))
@@ -204,7 +203,7 @@ object RecordStores {
         Future { rows.count(); slog("tap rows filled") })), Duration.Inf)
       // Each store ends in repartition-by-id + eager localCheckpoint:
       // the checkpoint truncates the derivation out of the logical plan
-      // (the ~20 checker joins — and every later query over the stores —
+      // (the full check — and every later query over the stores —
       // would otherwise re-run Catalyst analysis over the whole
       // derivation tree per query, which costs more than the joins at
       // this scale), and LogicalRDD keeps the hash partitioning, so

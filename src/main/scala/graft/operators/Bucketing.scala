@@ -140,9 +140,9 @@ object BucketedStores {
   }
 
   /** J6 (property chain prev/next reciprocity) with the store side of
-    * the join reading the bucketed table — identical violations to
-    * [[graft.checker.FullCheck.propChains]] over the same corrupted
-    * stores. */
+    * the join reading the bucketed table — identical violations to the
+    * `prev`/`next` pointers of [[graft.checker.FullCheck.violations]]
+    * over the same corrupted stores. */
   def propChainsBucketed(spark: SparkSession, dir: String): DataFrame = {
     val (props, _) = tables(spark, dir)
     val NIL = -1L

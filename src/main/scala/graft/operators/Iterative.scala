@@ -830,7 +830,7 @@ object Iterative {
         .select("node").localCheckpoint(false)
       val nWin = winners.count()
       val wh = hinted(winners, nWin, maxRows)
-      val removed = wh.unionAll(
+      val removed = winners.unionAll(
         edges.join(wh.select(col("node").as("src")), "src")
           .select(col("dst").as("node")))
         .distinct()

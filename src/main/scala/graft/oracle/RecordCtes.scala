@@ -269,7 +269,7 @@ object RecordCtes {
       relChainPtr("second_next", "second_node", backIsNext = false, "target_next"),
     ).map(check).mkString("\nUNION ALL ")
     // J5 runs over ALL property-owning primitives (node, rel, neostore)
-    // via one owners union — the twin of FullCheck.propOwners
+    // via one owners union — the twin of FullCheck's `next_prop` pointers
     val j5 = check(
       """  SELECT o.record_type,
         |    CASE WHEN p.id IS NULL OR NOT p.in_use THEN 'property_not_in_use'
@@ -302,7 +302,7 @@ object RecordCtes {
         |  FROM c_blocks b LEFT JOIN c_arrays d ON b.value_ref = d.id
         |  WHERE b.ptype = 5""".stripMargin)
     // P3 type-validity (invalid_property_value) — twin of
-    // FullCheck.blockTypes
+    // FullCheck's block-type scan predicate
     val jPT = check(
       s"""  SELECT 'property' AS record_type,
          |    CASE WHEN ptype NOT IN ($TLong, $TDouble, $TShortString, $TLongString, $TArray)

@@ -1,5 +1,9 @@
 package graft.checker
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.SparkTestBase
@@ -172,5 +176,75 @@ class FullCheckSpec extends SparkTestBase {
     assert(v.contains(("array", "self_reference", 200L)))
     assert(v.contains(("array", "multiple_owners", 208L)))
     assert(v.contains(("array", "orphan_chain", 200L)))
+  }
+
+  private def multiset(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+
+  /** ScaleCheckSpec's generated store under the seeded corruption */
+  private lazy val corrupted: Stores = Corruption(ScaleCheck.stores(spark, 500L)).persistAll()
+
+  test("corrupted generated store: exact violation counts, duplicates included") {
+    val v = FullCheck.violations(corrupted)
+    val got = v.groupBy("record_type", "violation").count().collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    // captured from the per-join union this plan replaced
+    assert(got === Map[(String, String), Long](
+      ("array", "invalid_length") -> 12L,
+      ("array", "multiple_owners") -> 3L,
+      ("array", "next_block_empty") -> 9L,
+      ("array", "orphan_chain") -> 3L,
+      ("array", "self_reference") -> 9L,
+      ("node", "relationship_not_in_use") -> 5L,
+      ("property", "array_empty") -> 3L,
+      ("property", "invalid_property_value") -> 6L,
+      ("property", "multiple_owners") -> 6L,
+      ("property", "orphan_chain") -> 11L,
+      ("property", "string_empty") -> 4L,
+      ("relationship", "label_not_in_use") -> 15L,
+      ("relationship", "property_not_in_use") -> 10L,
+      ("relationship", "source_next_does_not_reference_back") -> 7L,
+      ("relationship", "source_next_not_in_use") -> 12L,
+      ("relationship", "source_node_does_not_reference_back") -> 3L,
+      ("relationship", "source_node_not_in_use") -> 15L,
+      ("relationship", "source_prev_does_not_reference_back") -> 14L,
+      ("relationship", "source_prev_not_in_use") -> 8L,
+      ("relationship", "target_next_does_not_reference_back") -> 6L,
+      ("relationship", "target_next_not_in_use") -> 9L,
+      ("relationship", "target_node_does_not_reference_back") -> 2L,
+      ("relationship", "target_node_not_in_use") -> 20L,
+      ("relationship", "target_prev_does_not_reference_back") -> 7L,
+      ("relationship", "target_prev_not_in_use") -> 5L,
+      ("string", "invalid_length") -> 22L,
+      ("string", "next_block_empty") -> 18L,
+      ("string", "self_reference") -> 20L))
+    assert(v.count() === 264L)
+  }
+
+  test("the eight phases together are exactly the violations multiset") {
+    val ps = FullCheck.phases(corrupted)
+    assert(ps.map(_._1) === Seq("node_store", "rel_store", "prop_store", "string_store",
+      "array_store", "prop_keys", "rel_types", "owners"))
+    assert(multiset(ps.map(_._2).reduce(_ unionAll _)) === multiset(FullCheck.violations(corrupted)))
+  }
+
+  test("the full check's summary runs in at most 10 jobs") {
+    val sc = spark.sparkContext
+    val group = "full-check-jobs"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "FullCheck.summary over the fixture")
+    try FullCheck.summary(fixture).collect()
+    finally {
+      sc.clearJobGroup()
+      TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get() <= 10, s"${jobs.get()} jobs")
   }
 }
