@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graft.Bus
 
 /** Benchmark main. Prints ONE compact JSON line on stdout — the driver's
   * tail capture is bounded, so the parse-critical payload (total,
@@ -17,23 +17,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // 201 queries × several codegen units each blow far past the
-      // default 100-entry generated-class cache; once evicted, every
-      // repeat run re-pays ~0.5-1 s of janino compile × 32 waiting
-      // tasks PER STAGE (r8 bench: q28 ran 0.9 s isolated but 5-19 s
-      // in-suite with exec ≈ 1 s — pure recompile-wait). At sf-corpus
-      // size compile latency, not data, dominates; a class cache
-      // sized to the suite removes the thrash.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local()
     // Load covariate: 1-min /proc/loadavg. The r9 round's whole perf
     // story was "the box oscillated" (4 same-day runs spread
     // 133.8-187.4 s suite on identical code) but the artifacts carried
@@ -62,19 +46,8 @@ object Bench {
     // Task-end events arrive on the async listener bus: a kernel read
     // taken right after a ~100 s phase would absorb that phase's
     // late-arriving events (inflating exec) and miss its own trailing
-    // ones (deflating it) — ADVICE r12. waitUntilEmpty() is
-    // private[spark] at the Scala level but public in bytecode, so
-    // reflection reaches it; the fallback sleep bounds the skew when
-    // the internal API moves.
-    def drainBus(): Unit = try {
-      val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      bus.getClass.getMethods
-        .find(m => m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-        .map(_.invoke(bus))
-        .getOrElse(Thread.sleep(200))
-      ()
-    } catch { case _: Throwable => Thread.sleep(200) }
+    // ones (deflating it) — ADVICE r12.
+    def drainBus(): Unit = Bus.drain(spark.sparkContext)
     def calibrate(): (Double, Double) = {
       drainBus()
       val e0 = execMsCal.get()
@@ -260,7 +233,7 @@ object Bench {
     // singles ±50% (it_harmonic 130 exec-s isolated vs 300 in-suite).
     // Re-sampling every query would double the pass; re-sampling the
     // top-K wall spenders AFTER the pass (pressure over, inputs still
-    // warm — the isolated basis ColdProf measures) bounds the dominant
+    // warm — an isolated basis) bounds the dominant
     // error at ~1/6 the cost. Emitted as [in-suite, isolated] pairs in
     // bench_detail ("queries_cold2_wall_exec", failed resamples named in
     // "cold2_failed" instead); existing cold_sec / cold_exec_sec keep

@@ -114,12 +114,12 @@ object SparkEntry {
     // in queries_max / runs_wall_exec_gc_load), and the honest-cold
     // pass prices every rebuild regardless of where the fill happened.
     //
-    // Fills run concurrently on a small pool; SessionMemo's lazy cells
-    // make concurrent fills of one shared intermediate single-evaluate
-    // (dependency chains serialize by blocking on the winner's cell).
+    // Fills run concurrently on an 8-thread pool; SessionMemo's lazy
+    // cells make concurrent fills of one shared intermediate
+    // single-evaluate (dependency chains serialize by blocking on the
+    // winner's cell).
     // GRAFT_WARM_LOG: per-fill seconds to stderr (warmup cost budget).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      sys.env.getOrElse("GRAFT_WARM_THREADS", "8").toInt)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val fills = scala.collection.mutable.ArrayBuffer[scala.concurrent.Future[Unit]]()
@@ -735,7 +735,7 @@ object SparkEntry {
     "gen_summary" -> ((s, _) => graft.operators.DataGen.summary(s, 10000L)),
     // generated-workload record stores: per-store counts + the
     // clean-store invariant (freshly generated ⇒ zero violations) —
-    // the small-n twin of the ScaleCheck 10M/30M/40M perf run
+    // the small-n twin of the reference's 10M/30M/40M consistency perf run
     "gen_store_check" -> ((s, _) => graft.checker.ScaleCheck.profile(s, 2000L)),
     // iterative analytics: bounded min-propagation (traversal surface)
     "it_connected_components" -> ((s, dir) =>

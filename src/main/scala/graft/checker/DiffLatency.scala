@@ -2,16 +2,15 @@ package graft.checker
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Micro-batch latency harness for the incremental diff check — T3's
   * runtime contract. The reference applies checkChange per committed
   * transaction (checking/incremental/IncrementalDiffCheck.java:55:
   * every tx's DiffStore is checked before the commit is acknowledged),
   * so the latency of one micro-batch of transactions IS the check's
-  * user-facing cost. This harness drives
+  * user-facing cost. [[run]] drives
   * [[DiffCheck.violationsFromDiffs]] under a steady MemoryStream of tx
-  * batches and reports per-batch wall-time percentiles.
+  * batches and times each batch.
   *
   * The synthesized DiffStore is id-derived (no RNG, like every
   * generator in this repo): each tx changes `recordsPerTx` node records
@@ -20,9 +19,8 @@ import org.apache.spark.sql.streaming.Trigger
   * expected violation count is exact: `txPerBatch × recordsPerTx / 2`
   * per batch.
   *
-  * `runMain graft.checker.DiffLatency [nBatches txPerBatch recordsPerTx]`
-  * prints one JSON line with p50/p95/max batch latency (steady-state:
-  * batch 0 carries plan/codegen warmup and is reported separately).
+  * [[run]] returns the per-batch wall seconds (batch 0 carries
+  * plan/codegen warmup) and the violation total.
   */
 object DiffLatency {
   /** One batch's DiffStore for the given tx ids. Diff rows are built
@@ -93,31 +91,5 @@ object DiffLatency {
       }
     } finally q.stop()
     (timings.toVector, violations)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val nBatches = args.lift(0).map(_.toInt).getOrElse(30)
-    val txPerBatch = args.lift(1).map(_.toInt).getOrElse(100)
-    val recordsPerTx = args.lift(2).map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val (ts, violations) = run(spark, nBatches, txPerBatch, recordsPerTx)
-    val steady = ts.drop(1).sorted
-    def pct(p: Double) =
-      steady((p * (steady.size - 1)).round.toInt.min(steady.size - 1))
-    def r3(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    val expected = nBatches.toLong * txPerBatch * recordsPerTx / 2
-    println(
-      s"""{"metric":"diff_latency","batches":$nBatches,"tx_per_batch":$txPerBatch,""" +
-      s""""records_per_tx":$recordsPerTx,"first_batch_sec":${r3(ts.head)},""" +
-      s""""p50_sec":${r3(pct(0.5))},"p95_sec":${r3(pct(0.95))},"max_sec":${r3(steady.last)},""" +
-      s""""violations":$violations,"expected_violations":$expected}""")
-    spark.stop()
   }
 }

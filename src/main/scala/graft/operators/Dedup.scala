@@ -216,7 +216,7 @@ object Dedup {
     // twice and Spark does not dedupe common subtrees, so without the
     // persist the window sort (the compute's most expensive stage —
     // one total shuffle+sort of the shingle⋈df table) and both joins
-    // under it executed once PER SIDE (r14 ColdProf: 328 exec-s cold,
+    // under it executed once PER SIDE (r14 isolated cold profile: 328 exec-s cold,
     // 24× the plain inverted-index twin; the plan carried two Window
     // operators over identical input).
     val pref = sh.join(df, "sfp")
@@ -245,7 +245,7 @@ object Dedup {
     // complete (a shared non-prefix key produces no collision), so the
     // probe family's collision-count trick does not apply — and the
     // posting re-join exploded 1.17M candidates × ~50 shingles/doc into
-    // a 78.6M-row exchange (r14 PrefixProf: 310-335 of the rebuild's
+    // a 78.6M-row exchange (r14 phase-split profile: 310-335 of the rebuild's
     // ~520 exec-s). Attaching each side's whole shingle set as ONE
     // array row (docs × ~50 longs — a bounded per-doc payload at any
     // scale; the df cap bounds pair fan-out, doc length bounds the
@@ -494,8 +494,8 @@ object Dedup {
   /** The full MinHash+LSH near-dup pipeline over an ARBITRARY
     * (doc_id, text) corpus — signatures, banded candidate join, exact
     * Jaccard verify — with no per-(session, dir) memoization; the
-    * caller owns the lifecycle. Used by the generated-corpus scale
-    * harness ([[graft.operators.DedupScale]]); the sf-dir operator
+    * caller owns the lifecycle (LlmScaleSpec grades it on the
+    * [[graft.operators.DedupScale]] corpus); the sf-dir operator
     * [[minhashLsh]] composes the same pieces around session memos.
     * Callers must [[TextOps.ensureRegistered]] first. The returned
     * plan reads the shingle table (persisted inside [[shingles]])
@@ -928,10 +928,8 @@ object Dedup {
       winnowPairsFromPacked(TextOps.winnowPacked(spark, dir)).persist())
   }
 
-  /** [[winnowPairs]] over an arbitrary (doc_id, text) corpus — used by
-    * the generated-corpus scale harness
-    * ([[graft.operators.TextScale]]). Callers must
-    * [[TextOps.ensureRegistered]] first. */
+  /** [[winnowPairs]] over an arbitrary (doc_id, text) corpus. Callers
+    * must [[TextOps.ensureRegistered]] first. */
   def winnowPairsOf(corpus: DataFrame): DataFrame =
     winnowPairsFromPacked(TextOps.winnowPackedOf(corpus))
 
@@ -999,12 +997,6 @@ object Dedup {
       .groupBy("source_a", "source_b")
       .agg(count(lit(1)).as("n_pairs"), sum("n_shared").as("shared_fps"))
   }
-
-  /** the pair stage alone, over already-selected fingerprints — lets
-    * the scale harness reuse one persisted selection pass for both
-    * the selection and pair measurements. */
-  def winnowPairsFromFps(selected: DataFrame): DataFrame =
-    pairsFromDistinctFps(selected.select(col("doc_id"), col("h")).distinct())
 
   /** df cap -> inverted-index self-join over an ALREADY (doc,h)-unique
     * fingerprint stream. */

@@ -40,15 +40,11 @@ import org.apache.spark.sql.functions._
   * checker — work bounded by the CHANGE, never the store
   * (checking/incremental/IncrementalDiffCheck.java:55); here the
   * change is the crawl delta and the bound is its key shards.
-  *
-  * `runMain graft.operators.DedupShard [nBatches docsPerBatch nBase nShards]`
   */
 object DedupShard {
-  /** shard counts: the query path's sf-dir corpora are tiny (64 keeps
-    * the partition-dir count sane); the scale harness uses 4096 so a
-    * small batch's key set provably touches a minority of shards. */
+  /** shard count of the query path: the sf-dir corpora are tiny, and
+    * 64 keeps the partition-dir count sane. */
   val QueryShards = 64
-  val ScaleShards = 4096
 
   /** Write the sharded index (posting table, df sidecar, capped-size
     * sidecar) under `path`. One corpus pass each — index construction
@@ -56,10 +52,10 @@ object DedupShard {
   def buildIndex(spark: SparkSession, base: DataFrame, path: String,
                  nShards: Int): Unit = {
     // repartition ON the partition column before partitionBy: without
-    // it every write task opens a file in every shard dir (32 × 4096 =
-    // 131k small files at the scale harness — measured before this
-    // exchange was added); with it each shard is written by exactly
-    // one task, so files == shards
+    // it every write task opens a file in every shard dir (32 tasks ×
+    // 4096 shards = 131k small files, measured before this exchange
+    // was added); with it each shard is written by exactly one task,
+    // so files == shards
     val post = Dedup.rawPostings(base)
       .withColumn("shard", pmod(col("sfp"), lit(nShards.toLong)))
       .repartition(col("shard"))
@@ -203,71 +199,5 @@ object DedupShard {
     }
     probeMemo.getOrElseUpdate(spark, dir)(
       probe(spark, path, QueryShards, Dedup.deltaCorpus(spark, dir))._1)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val nBatches = args.lift(0).map(_.toInt).getOrElse(30)
-    val docsPerBatch = args.lift(1).map(_.toInt).getOrElse(8)
-    val nBase = args.lift(2).map(_.toLong).getOrElse(1000000L)
-    val nShards = args.lift(3).map(_.toInt).getOrElse(ScaleShards)
-    val spark = LlmScale.session("DedupShard")
-    TextOps.ensureRegistered(spark)
-    // per-batch executor task time next to wall (load-independent basis)
-    val execMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            ev: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = ev.taskMetrics
-          if (m != null) { execMs.addAndGet(m.executorRunTime); () }
-        }
-      })
-    val path = s"target/shard_index/scale_${nBase}_$nShards"
-    val tb = System.nanoTime()
-    buildIndex(spark, DedupScale.corpus(spark, nBase), path, nShards)
-    val buildSec = (System.nanoTime() - tb) / 1e9
-    val totalPostings = spark.read.parquet(s"$path/post").count()
-    val ts = scala.collection.mutable.ArrayBuffer[Double]()
-    val es = scala.collection.mutable.ArrayBuffer[Double]()
-    val fracs = scala.collection.mutable.ArrayBuffer[Double]()
-    val shardFracs = scala.collection.mutable.ArrayBuffer[Double]()
-    var pairs = 0L; var hits = 0L
-    (0 until nBatches).foreach { b =>
-      val t0 = System.nanoTime()
-      val e0 = execMs.get()
-      val (p, st) = probe(spark, path, nShards,
-        DedupStream.deltaDocs(spark, b.toLong, docsPerBatch, nBase))
-      val n = p.count()
-      val h = p.filter(col("b") >= DedupStream.DeltaBase &&
-        pmod(col("b") - DedupStream.DeltaBase, lit(2L)) === 0 &&
-        col("a") === pmod(col("b") - DedupStream.DeltaBase, lit(nBase)) -
-          when(pmod(pmod(col("b") - DedupStream.DeltaBase, lit(nBase)),
-            lit(10L)) === 9L, 1L).otherwise(0L)).count()
-      ts += (System.nanoTime() - t0) / 1e9
-      es += (execMs.get() - e0) / 1e3
-      fracs += st.postingsScanned.toDouble / totalPostings
-      shardFracs += st.shardsTouched.toDouble / nShards
-      pairs += n; hits += h
-    }
-    val expected = (nBatches.toLong * docsPerBatch + 1) / 2
-    def steadyOf(v: Seq[Double]) =
-      { val s = v.drop(1).sorted; if (s.isEmpty) v.sorted.toVector else s.toVector }
-    val steady = steadyOf(ts.toSeq)
-    val steadyE = steadyOf(es.toSeq)
-    def pct(v: Vector[Double], p: Double) =
-      v((p * (v.size - 1)).round.toInt.min(v.size - 1))
-    def r3(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    val fs = fracs.sorted.toVector
-    val ss = shardFracs.sorted.toVector
-    println(
-      s"""{"metric":"dedup_shard","batches":$nBatches,"docs_per_batch":$docsPerBatch,""" +
-      s""""n_base":$nBase,"n_shards":$nShards,"build_sec":${r3(buildSec)},""" +
-      s""""first_batch_sec":${r3(ts.head)},"p50_sec":${r3(pct(steady, 0.5))},""" +
-      s""""p95_sec":${r3(pct(steady, 0.95))},"max_sec":${r3(steady.last)},""" +
-      s""""exec_p50_sec":${r3(pct(steadyE, 0.5))},"exec_p95_sec":${r3(pct(steadyE, 0.95))},""" +
-      s""""frac_postings_scanned_p50":${r3(pct(fs, 0.5))},""" +
-      s""""frac_shards_touched_p50":${r3(pct(ss, 0.5))},""" +
-      s""""pairs":$pairs,"planted_hits":$hits,"expected_planted":$expected}""")
-    spark.stop()
   }
 }

@@ -27,17 +27,15 @@ import org.apache.spark.sql.functions._
   * Per-batch probe cost here is one columnar pass over the cached
   * posting table with the (tiny) delta broadcast — linear in the base
   * at local[32]; a 100 TB deployment bounds that scan by sharding the
-  * posting table on sfp so a delta probes only its key shards. The
-  * harness reports what the contract owes: per-batch wall p50/p95/max
-  * (batch 0 separate — plan + codegen warmup), planted-pair recall,
-  * and zero spurious strong pairs.
+  * posting table on sfp so a delta probes only its key shards
+  * ([[DedupShard]]). [[run]] returns what the contract owes: per-batch
+  * wall and executor seconds (batch 0 carries plan + codegen warmup)
+  * and the planted-pair hits against the number planted.
   *
   * Planted truth: every even-offset delta doc is a base doc with its
   * first three tokens dropped (near-dup, Jaccard >> τ — must pair
   * with its base original); odd offsets draw from cids far outside
   * the base range (must pair with nothing).
-  *
-  * `runMain graft.operators.DedupStream [nBatches docsPerBatch nBase]`
   */
 object DedupStream {
   /** delta ids start here — disjoint from any base id. */
@@ -85,10 +83,6 @@ object DedupStream {
     * those sidecars. */
   def batchPairs(baseCapped: DataFrame, baseDf: DataFrame,
                  delta: DataFrame): DataFrame = {
-    // NOTE: graft.StreamBatchProf's GRAFT_SB_SUBPHASES block mirrors
-    // these steps (keepDelta/overCap/collision-count) for per-phase
-    // attribution — keep the two in sync when changing the shape here
-    // (ADVICE r14).
     // `baseCapped` is the base posting table already filtered to
     // BASE-df ≤ MaxDf — the maintained index's steady-state capped
     // postings (what [[Dedup.nearShingles]] holds for the query path
@@ -246,30 +240,5 @@ object DedupStream {
     // odd k and hold only floor(dpb/2) evens — ADVICE r9)
     (timings.toVector, execs.toVector, pairs, hits,
       (nBatches.toLong * docsPerBatch + 1) / 2)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val nBatches = args.lift(0).map(_.toInt).getOrElse(30)
-    val docsPerBatch = args.lift(1).map(_.toInt).getOrElse(200)
-    val nBase = args.lift(2).map(_.toLong).getOrElse(200000L)
-    val spark = LlmScale.session("DedupStream")
-    val (ts, es, pairs, hits, expected) = run(spark, nBatches, docsPerBatch, nBase)
-    // nBatches=1 leaves no steady batches — fall back to the first
-    // batch's timing rather than indexing an empty Vector (ADVICE r9)
-    def steadyOf(v: Vector[Double]) =
-      { val s = v.drop(1).sorted; if (s.isEmpty) v.sorted else s }
-    val steady = steadyOf(ts)
-    val steadyE = steadyOf(es)
-    def pctOf(v: Seq[Double], p: Double) =
-      v((p * (v.size - 1)).round.toInt.min(v.size - 1))
-    def pct(p: Double) = pctOf(steady, p)
-    def r3(d: Double) = BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-    println(
-      s"""{"metric":"dedup_stream","batches":$nBatches,"docs_per_batch":$docsPerBatch,""" +
-      s""""n_base":$nBase,"first_batch_sec":${r3(ts.head)},""" +
-      s""""p50_sec":${r3(pct(0.5))},"p95_sec":${r3(pct(0.95))},"max_sec":${r3(steady.last)},""" +
-      s""""exec_p50_sec":${r3(pctOf(steadyE, 0.5))},"exec_p95_sec":${r3(pctOf(steadyE, 0.95))},""" +
-      s""""pairs":$pairs,"planted_hits":$hits,"expected_planted":$expected}""")
-    spark.stop()
   }
 }

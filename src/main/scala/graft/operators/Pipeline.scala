@@ -288,13 +288,7 @@ object Pipeline {
 
   private def ngramOverlapCompute(spark: SparkSession, dir: String): DataFrame = {
     TextOps.ensureRegistered(spark)
-    ngramOverlapOf(TextOps.tokenTable(spark, dir))
-  }
-
-  /** the exact audit over an arbitrary (doc_id, t) token table — the
-    * form the scale harness drives. */
-  private[operators] def ngramOverlapOf(toks: DataFrame): DataFrame = {
-    val dg = overlapGramTableOf(toks)
+    val dg = overlapGramTable(spark, dir)
     val train = dg.filter(col("r") === 0L).select("gram").distinct()
     val ev = dg.filter(col("r") =!= 0L)
     val tot = ev.groupBy("doc_id", "r").agg(count(lit(1)).as("n_grams"))
@@ -317,9 +311,9 @@ object Pipeline {
     * m only tunes how many eval rows survive to the shuffle. Size it
     * like any bloom, ~10 bits per train gram: the gated sf-tier query
     * uses 2²² bits = 512 KiB (64 Ki words; the sf0.1 train set is
-    * ~1M grams), and [[graft.operators.AuditScale]] passes 2²⁸
-    * (32 MiB) for its 42M-gram tier — constant-size broadcast state
-    * either way, never corpus-shaped. k = 3 probes. */
+    * ~1M grams); a 42M-gram train set would take 2²⁸ (32 MiB) —
+    * constant-size broadcast state either way, never corpus-shaped.
+    * k = 3 probes. */
   val OverlapBloomBits = 1L << 22
   val OverlapBloomK = 3
 
@@ -398,21 +392,14 @@ object Pipeline {
 
   private def ngramOverlapBloomCompute(spark: SparkSession, dir: String): DataFrame = {
     TextOps.ensureRegistered(spark)
-    ngramOverlapBloomOf(TextOps.tokenTable(spark, dir), OverlapBloomBits)
-  }
-
-  /** [[ngramOverlapBloom]] over an arbitrary (doc_id, t) token table
-    * with caller-sized bitset — the form the scale harness drives. */
-  private[operators] def ngramOverlapBloomOf(toks: DataFrame, bits: Long): DataFrame = {
-    TextOps.ensureRegistered(toks.sparkSession)
-    val dg = overlapGramTableOf(toks)
+    val dg = overlapGramTable(spark, dir)
     val train = dg.filter(col("r") === 0L).select("gram").distinct()
-    val bloom = overlapBloomOf(train, bits)
+    val bloom = overlapBloomOf(train, OverlapBloomBits)
     val ev = dg.filter(col("r") =!= 0L)
     // per-doc gram totals come from the UNfiltered eval side — the
     // prefilter must only cheapen the hit join, never the denominators
     val tot = ev.groupBy("doc_id", "r").agg(count(lit(1)).as("n_grams"))
-    val evPre = ev.crossJoin(broadcast(bloom)).filter(overlapPass(bits)).drop("bm")
+    val evPre = ev.crossJoin(broadcast(bloom)).filter(overlapPass(OverlapBloomBits)).drop("bm")
     val hit = evPre.join(train, "gram")
       .groupBy("doc_id").agg(count(lit(1)).as("n_hit"))
     tot.join(hit, Seq("doc_id"), "left")
@@ -433,13 +420,7 @@ object Pipeline {
   private[graft] def overlapBloomReduction(spark: SparkSession, dir: String,
       bits: Long = OverlapBloomBits): (Long, Long) = {
     TextOps.ensureRegistered(spark)
-    overlapBloomReductionOf(TextOps.tokenTable(spark, dir), bits)
-  }
-
-  private[operators] def overlapBloomReductionOf(toks: DataFrame,
-      bits: Long): (Long, Long) = {
-    TextOps.ensureRegistered(toks.sparkSession)
-    val dg = overlapGramTableOf(toks)
+    val dg = overlapGramTable(spark, dir)
     val train = dg.filter(col("r") === 0L).select("gram").distinct()
     val bloom = overlapBloomOf(train, bits)
     val ev = dg.filter(col("r") =!= 0L).persist()
@@ -516,18 +497,6 @@ object Pipeline {
       .agg(count(lit(1)).as("n_docs"),
         sum(coalesce(col("dropped"), lit(0L))).as("n_dropped"))
       .withColumn("n_kept", col("n_docs") - col("n_dropped"))
-
-  /** [[ngramDecontaminate]] over an arbitrary (doc_id, t) token table
-    * and (doc_id, source) mapping — the form the scale harness drives. */
-  private[operators] def ngramDecontaminateOf(toks: DataFrame, src: DataFrame): DataFrame =
-    decontamRollupOf(src, leakyTrainDocsOf(overlapGramTableOf(toks)))
-
-  /** Bloom-prefiltered [[ngramDecontaminateOf]] (identical output). */
-  private[operators] def ngramDecontaminateBloomOf(toks: DataFrame, src: DataFrame,
-      bits: Long): DataFrame = {
-    TextOps.ensureRegistered(toks.sparkSession)
-    decontamRollupOf(src, leakyTrainDocsBloomOf(overlapGramTableOf(toks), bits))
-  }
 
   private def ngramDecontaminateCompute(spark: SparkSession, dir: String): DataFrame = {
     TextOps.ensureRegistered(spark)
@@ -615,12 +584,7 @@ object Pipeline {
 
   private def contamTopDocsCompute(spark: SparkSession, dir: String): DataFrame = {
     TextOps.ensureRegistered(spark)
-    contamTopDocsOf(overlapGramTable(spark, dir))
-  }
-
-  /** [[contamTopDocs]] over an arbitrary pre-built (doc_id, r, gram)
-    * table — the form the scale harness drives. */
-  private[operators] def contamTopDocsOf(dg: DataFrame): DataFrame = {
+    val dg = overlapGramTable(spark, dir)
     val train = dg.filter(col("r") === 0L).select("gram").distinct()
     val ev = dg.filter(col("r") =!= 0L)
     val tot = ev.groupBy("doc_id", "r").agg(count(lit(1)).as("n_grams"))
@@ -694,17 +658,8 @@ object Pipeline {
 
   private def leakageFamiliesCompute(spark: SparkSession, dir: String): DataFrame = {
     TextOps.ensureRegistered(spark)
-    leakageFamiliesOf(leakagePairSources(spark, dir)
-      .map { case (f, df, _) => (f, df) })
-  }
-
-  /** the split-leakage rollup over arbitrary (family, pair-table)
-    * sources — the form the scale harness drives over its generated
-    * pair tables. */
-  private[operators] def leakageFamiliesOf(
-      fams: Seq[(String, DataFrame)]): DataFrame =
-    fams
-      .map { case (f, df) =>
+    leakagePairSources(spark, dir)
+      .map { case (f, df, _) =>
         df.select(lit(f).as("family"), col("a"), col("b")) }
       .reduce(_ unionAll _)
       .select(col("family"),
@@ -714,6 +669,7 @@ object Pipeline {
         splitNameOf(greatest(col("ra"), col("rb"))).as("split_b"))
       .groupBy("family", "split_a", "split_b")
       .agg(count(lit(1)).as("n_pairs"))
+  }
 
   /** Source-mixture resampling — hit a per-domain target mix without
     * RNG: each source keeps its first `target` docs in multiplicative-
@@ -1031,13 +987,27 @@ object Pipeline {
   }
 
   /** [[dsirWeights]] over an arbitrary tokenized corpus (doc_id, t)
-    * with an explicit target-slice id set — used by the
-    * generated-corpus scale harness ([[graft.operators.TextScale]]).
-    * Callers must [[TextOps.ensureRegistered]] first. */
+    * with an explicit target-slice id set. Callers must
+    * [[TextOps.ensureRegistered]] first. */
   def dsirWeightsOf(t: DataFrame, target: DataFrame): DataFrame = {
     val b = DsirBuckets
-    val docBuck = dsirDocBuckets(t)
-    val ratio = dsirRatioOf(docBuck, target)
+    // per-(doc, hashed-bucket) n-gram counts (n ≤ 2): the corpus-sized pass
+    val uni = t.select(col("doc_id"), explode(col("t")).as("g"))
+    val bi = t.filter(size(col("t")) >= 2)
+      .select(col("doc_id"), explode(expr(
+        """transform(sequence(0, size(t) - 2),
+          |  j -> concat_ws(' ', element_at(t, j + 1), element_at(t, j + 2)))"""
+          .stripMargin)).as("g"))
+    val docBuck = uni.unionAll(bi)
+      .select(col("doc_id"),
+        pmod(expr(TextOps.fpSql("g")), lit(DsirBuckets)).as("bucket"))
+      .groupBy("doc_id", "bucket").agg(count(lit(1)).as("cnt"))
+    // per-bucket (rc, tc) counts
+    val tc = docBuck.join(target, "doc_id")
+      .groupBy("bucket").agg(sum("cnt").as("tc"))
+    val ratio = docBuck.groupBy("bucket").agg(sum("cnt").as("rc"))
+      .join(tc, Seq("bucket"), "left")
+      .select(col("bucket"), col("rc"), coalesce(col("tc"), lit(0L)).as("tc"))
     val totals = ratio.agg(sum("tc").as("tt"), sum("rc").as("rt"))
     // DECIMAL(38,0) intermediates (HUGEINT in the DuckDB twin): the
     // int64 product Scale·(tc+1)·(rt+B) wraps once (tc+1)·(rt+B)
@@ -1059,8 +1029,8 @@ object Pipeline {
           .stripMargin).as("lr_micro"))
     // per-doc sums stay LONG: the aggregation state is a primitive
     // 8-byte accumulator inside whole-stage codegen instead of a
-    // 16-byte Decimal per group (1M groups × ~200M input rows at the
-    // scale harness), and the int64 envelope is generous — Σ cnt·lr ≤
+    // 16-byte Decimal per group (1M groups × ~200M input rows on a
+    // 1M-doc corpus), and the int64 envelope is generous — Σ cnt·lr ≤
     // tokens(doc) · max lr, and with any non-degenerate target (≥1% of
     // reference mass) max lr ≤ 100·Scale = 1e8, so docs up to 1e10
     // tokens sum exactly. (Measured 1M-doc DSIR walls are parity
@@ -1075,32 +1045,6 @@ object Pipeline {
       .agg(sum("cnt").as("n_tokens"),
         sum(col("cnt") * col("lr_micro")).as("score_micro"))
       .withColumn("avg_micro", expr("score_micro div n_tokens"))
-  }
-
-  /** per-(doc, hashed-bucket) n-gram counts (n ≤ 2) — the corpus-sized
-    * pass [[dsirWeightsOf]] starts from; exposed for the Zipfian
-    * wrap-regime scale harness ([[ZipfScale]]). */
-  private[operators] def dsirDocBuckets(t: DataFrame): DataFrame = {
-    val uni = t.select(col("doc_id"), explode(col("t")).as("g"))
-    val bi = t.filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        """transform(sequence(0, size(t) - 2),
-          |  j -> concat_ws(' ', element_at(t, j + 1), element_at(t, j + 2)))"""
-          .stripMargin)).as("g"))
-    uni.unionAll(bi)
-      .select(col("doc_id"),
-        pmod(expr(TextOps.fpSql("g")), lit(DsirBuckets)).as("bucket"))
-      .groupBy("doc_id", "bucket").agg(count(lit(1)).as("cnt"))
-  }
-
-  /** per-bucket (rc, tc) counts from the doc-bucket table. */
-  private[operators] def dsirRatioOf(docBuck: DataFrame,
-                                     target: DataFrame): DataFrame = {
-    val tc = docBuck.join(target, "doc_id")
-      .groupBy("bucket").agg(sum("cnt").as("tc"))
-    val rc = docBuck.groupBy("bucket").agg(sum("cnt").as("rc"))
-    rc.join(tc, Seq("bucket"), "left")
-      .select(col("bucket"), col("rc"), coalesce(col("tc"), lit(0L)).as("tc"))
   }
 
   /** Temperature exponent for [[sourceMix]] — the α of
@@ -1162,29 +1106,20 @@ object Pipeline {
   private def dupSourcesCompute(spark: SparkSession, dir: String): DataFrame = {
     TextOps.ensureRegistered(spark)
     val src = TextOps.docs(spark, dir).select(col("doc_id"), col("source"))
-    dupSourcesOf(
-      leakagePairSources(spark, dir)
-        .map { case (f, df, strong) =>
-          df.select(lit(f).as("family"),
-            pmod(col("a"), lit(Dedup.IdOffset)).as("ba"),
-            pmod(col("b"), lit(Dedup.IdOffset)).as("bb"),
-            when(strong, 1L).otherwise(0L).as("strong")) }
-        .reduce(_ unionAll _),
-      src)
-  }
-
-  /** the per-family cross-source rollup over an arbitrary
-    * (family, ba, bb, strong) pair union and a (doc_id, source) map —
-    * the form the scale harness drives (its generated ids carry no
-    * variant offset, so base-mapping stays with the dir compute). */
-  private[operators] def dupSourcesOf(rows: DataFrame, src: DataFrame): DataFrame =
-    rows
+    leakagePairSources(spark, dir)
+      .map { case (f, df, strong) =>
+        df.select(lit(f).as("family"),
+          pmod(col("a"), lit(Dedup.IdOffset)).as("ba"),
+          pmod(col("b"), lit(Dedup.IdOffset)).as("bb"),
+          when(strong, 1L).otherwise(0L).as("strong")) }
+      .reduce(_ unionAll _)
       .join(src.select(col("doc_id").as("ba"), col("source").as("sa")), "ba")
       .join(src.select(col("doc_id").as("bb"), col("source").as("sb")), "bb")
       .select(col("family"), least(col("sa"), col("sb")).as("source_lo"),
         greatest(col("sa"), col("sb")).as("source_hi"), col("strong"))
       .groupBy("family", "source_lo", "source_hi")
       .agg(count(lit(1)).as("n_pairs"), sum("strong").as("n_strong"))
+  }
 
   /** Token budget + per-source epoch cap for [[epochPlan]]. The budget
     * is an absolute constant (like [[BudgetChars]]) so the twin stays
@@ -1246,15 +1181,7 @@ object Pipeline {
     * identically at the gate's 6-dp canonicalization. */
   def sourceShift(spark: SparkSession, dir: String): DataFrame = {
     TextOps.ensureRegistered(spark)
-    sourceShiftOf(TextOps.docs(spark, dir))
-  }
-
-  /** [[sourceShift]] over an arbitrary (source, text) corpus — used by
-    * the generated-corpus scale harness
-    * ([[graft.operators.ShiftScale]]). Callers must
-    * [[TextOps.ensureRegistered]] first. */
-  def sourceShiftOf(docs: DataFrame): DataFrame = {
-    val sb = docs
+    val sb = TextOps.docs(spark, dir)
       .select(col("source"), explode(TextOps.toks(col("text"))).as("tok"))
       .select(col("source"),
         pmod(expr(TextOps.fpSql("tok")), lit(ShiftBuckets)).as("bucket"))

@@ -916,9 +916,9 @@ object Similarity {
     *     Slicing, not planes, is what bounds the worst case.
     *
     * Occupancy tables broadcast (≤ 256 and ≤ 65,792 rows by
-    * construction). Measured at 1M planted-cluster vectors in
-    * [[AnnScale]] (BASELINE.md): edge precision vs the plant stays
-    * ≈1.0 while scored pairs drop from quadratic to ≤ N·cap. */
+    * construction). Measured at 1M planted-cluster vectors
+    * ([[AnnScale]] corpus, BASELINE.md): edge precision vs the plant
+    * stays ≈1.0 while scored pairs drop from quadratic to ≤ N·cap. */
   /** The refine-then-slice grouping of [[knnCandidates]], exposed so
     * [[bucketStats]] can audit the same assignment: (vec_id, q, nrm,
     * key1, slice, occ0, occ1). */
@@ -1150,7 +1150,7 @@ object Similarity {
     // d is PERSISTED because both the per-label moments and the z-score
     // join read it and Spark does not dedupe common subtrees — uncached,
     // the explode+join+agg executed twice (half of the query's isolated
-    // 11-13 cold exec-s in the r14 ColdProf).
+    // 11-13 cold exec-s in an r14 isolated cold profile).
     val d = el.join(broadcast(stats), Seq("label", "j"))
       .withColumn("t", col("n") * col("x") - col("s"))
       .groupBy("vec_id", "label").agg(sum(col("t") * col("t")).as("d2"))
@@ -1186,10 +1186,10 @@ object Similarity {
     * the bucket with the query's weakest hyperplane bit flipped
     * (smallest |plane dot| = the plane most likely to have mis-hashed
     * a true neighbor; ties to the lowest plane index, an exact integer
-    * order). The 1M-vector harness measured the lift at recall@10
-    * 0.639 → 0.996 for a bounded 2× candidate cost
-    * ([[graft.operators.AnnScale]], BASELINE.md) — this is the
-    * query-surface twin at the sf corpus. Still equi-joins only: the
+    * order). At 1M vectors of the [[graft.operators.AnnScale]] corpus
+    * the lift measured recall@10 0.639 → 0.996 for a bounded 2×
+    * candidate cost (BASELINE.md) — this is the query-surface twin at
+    * the sf corpus. Still equi-joins only: the
     * probe set is two rows per query, the corpus never pairs with
     * itself. A candidate matches at most one probe (its single bucket;
     * the flip is always nonzero), so no dedup pass is needed.

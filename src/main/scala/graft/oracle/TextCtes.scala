@@ -2237,10 +2237,7 @@ object TextCtes {
     "JOIN documents d USING (doc_id) WHERE d.lang = 'en'")
 
   /** [[dsirWeights]] over any (doc_id, text) table with an arbitrary
-    * target-slice clause for the tcb CTE — the Zipfian wrap-regime
-    * harness ([[graft.operators.ZipfScale]]) emits this SQL next to
-    * its generated corpus so the HUGEINT twin runs on the exact same
-    * rows. */
+    * target-slice clause for the tcb CTE. */
   def dsirWeightsOver(table: String, targetClause: String): String = {
     import graft.operators.Pipeline.{DsirBuckets, DsirScale}
     s"""WITH dt AS (SELECT doc_id, ${toks("text")} AS t FROM $table),

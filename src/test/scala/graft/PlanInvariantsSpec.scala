@@ -2,7 +2,7 @@ package graft
 
 /** Plan-shape regression guards for the fixes that perf depends on —
   * the numbers in BENCH only hold while these shapes hold, so they are
-  * pinned as asserts, not just printed by PlanAudit:
+  * pinned as asserts:
   *
   *  - dd_minhash_lsh must score CANDIDATES (joins keyed by doc id or
   *    (doc, sfp)) — an sfp-only join is the full inverted-index pair
@@ -18,6 +18,10 @@ class PlanInvariantsSpec extends SparkTestBase {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir)
       .queryExecution.executedPlan.toString
+
+  test("entry smoke: SparkEntry.entry returns rows on sf0.001") {
+    assert(SparkEntry.entry(spark).count() > 0L)
+  }
 
   test("dd_minhash_lsh verify path has no pair-expansion join (candidate-scored)") {
     val p = plan("dd_minhash_lsh")

@@ -2,7 +2,7 @@ package graft.checker
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.graft.TestBus
+import org.apache.spark.graft.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
@@ -242,7 +242,7 @@ class FullCheckSpec extends SparkTestBase {
     try FullCheck.summary(fixture).collect()
     finally {
       sc.clearJobGroup()
-      TestBus.drain(sc)
+      Bus.drain(sc)
       sc.removeSparkListener(listener)
     }
     assert(jobs.get() <= 10, s"${jobs.get()} jobs")

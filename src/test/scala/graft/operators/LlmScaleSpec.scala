@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
 
-/** Generated-corpus scale harness invariants at spec-sized n — the
-  * same plant/recall contracts the 1M-row runs report. */
+/** Generated-corpus invariants at spec-sized n — the planted structure
+  * ([[DedupScale]], [[AnnScale]]) that consumers grade recall against. */
 class LlmScaleSpec extends SparkTestBase {
 
   test("DedupScale corpus: planted dup is the base doc's 57-token prefix") {

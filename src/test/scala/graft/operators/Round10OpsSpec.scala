@@ -6,7 +6,7 @@ import graft.SparkTestBase
 
 /** Round-10 additions: the sharded dedup index's partition pruning
   * (the mechanism that bounds a probe's read cost) and the Zipfian
-  * generator feeding the DSIR wrap-regime harness. */
+  * generator of the DSIR wrap regime. */
 class Round10OpsSpec extends SparkTestBase {
 
   test("sharded index reads are partition-pruned on the shard column") {

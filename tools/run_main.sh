@@ -1,7 +1,10 @@
 #!/bin/bash
 # Run a graft main class directly against the compiled classes —
 # bypasses the sbt project lock so compiles and long runs can overlap.
-# Usage: tools/run_main.sh <MainClass> [args...]
+# Usage: tools/run_main.sh <MainClass> [args...], where MainClass is one of
+#   graft.Bench                        (env SPARK_GRAFT_SF_DIR)
+#   graft.Verify <sfDir> <outDir> [query ...]
+#   graft.Profile <query> [query ...]  (env SPARK_GRAFT_SF_DIR)
 MAIN=$1; shift
 # this checkout's classes, wherever it lives (an A/B copy runs its own)
 ROOT=$(cd "$(dirname "$0")/.." && pwd)
