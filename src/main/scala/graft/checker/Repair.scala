@@ -1,10 +1,9 @@
 package graft.checker
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Stores
+import graft.model.{RecordStores, Stores}
 
 /** J16 chain REPAIR — beyond reporting a broken pointer, compute what
   * it should have been. The reference explores neighbor chains to
@@ -20,33 +19,26 @@ import graft.model.Stores
   * (record_type, record_id, field, bad_value, good_value) — directly
   * applicable as a column-wise MERGE back onto the store.
   *
-  * Scale shape: one window shuffle keyed by endpoint node (identical
-  * to the derivation, see RecordStores.incidence) + one self-join on
-  * rel id; never materializes per-node chain arrays.
+  * The true chains come from the derivation that builds the stores
+  * ([[RecordStores.incidence]], [[RecordStores.chainPointers]],
+  * [[RecordStores.chainHeads]]) run over the live relationship
+  * records, so a self-loop is one chain position here exactly as in
+  * the stores. Scale shape: one window shuffle keyed by endpoint node
+  * plus one join on rel id; never materializes per-node chain arrays.
   */
 object Repair {
+  private val Pointers = Seq("first_prev", "first_next", "second_prev", "second_next")
+
   def chainRepairs(s: Stores): DataFrame = {
     val live = s.rels.filter(col("in_use"))
-    // recompute prev/next per (node, rel, side) from the broken
-    // store's own endpoint columns
-    val inc = live.select(col("first_node").as("node"), col("id").as("rel_id"),
-        lit(0).as("side"))
-      .unionAll(live.select(col("second_node").as("node"), col("id").as("rel_id"),
-        lit(1).as("side")))
-    val w = Window.partitionBy("node").orderBy("rel_id")
-    val pn = inc.select(col("node"), col("rel_id"), col("side"),
-      lag("rel_id", 1, -1).over(w).as("prev"),
-      lead("rel_id", 1, -1).over(w).as("next"))
-    val chain = pn.groupBy("rel_id").agg(
-      max(when(col("side") === 0, col("prev"))).as("g_first_prev"),
-      max(when(col("side") === 0, col("next"))).as("g_first_next"),
-      max(when(col("side") === 1, col("prev"))).as("g_second_prev"),
-      max(when(col("side") === 1, col("next"))).as("g_second_next"))
+    val inc = RecordStores.incidence(live.select(col("id"),
+      col("first_node").as("src"), col("second_node").as("dst")))
+    val chain = RecordStores.chainPointers(inc)
+      .select(col("rel_id") +: Pointers.map(f => col(f).as(s"g_$f")): _*)
 
     val relRepairs = live
       .join(chain, live("id") === chain("rel_id"))
-      .select(live("id"), explode(array(
-        Seq("first_prev", "first_next", "second_prev", "second_next").map { f =>
+      .select(live("id"), explode(array(Pointers.map { f =>
           struct(lit(f).as("field"), col(f).as("bad"), col(s"g_$f").as("good"))
         }: _*)).as("p"))
       .filter(col("p.bad") =!= col("p.good"))
@@ -55,11 +47,10 @@ object Repair {
         col("p.good").as("good_value"))
 
     // node chain heads: the true next_rel is the min surviving rel at
-    // the node (the derivation's rule)
-    val minRel = inc.groupBy("node").agg(min("rel_id").as("g_next_rel"))
+    // the node
     val nodeRepairs = s.nodes.filter(col("in_use"))
-      .join(minRel, col("id") === col("node"), "left")
-      .withColumn("good", coalesce(col("g_next_rel"), lit(-1L)))
+      .join(RecordStores.chainHeads(inc), col("id") === col("node"), "left")
+      .withColumn("good", coalesce(col("min_rel"), lit(-1L)))
       .filter(col("next_rel") =!= col("good"))
       .select(lit("node").as("record_type"), col("id").as("record_id"),
         lit("next_rel").as("field"), col("next_rel").as("bad_value"),

@@ -21,7 +21,7 @@ import graft.operators.DataGen
   * (incidence window keyed by node id).
   */
 object ScaleCheck {
-  import RecordSpec._
+  import RecordSpec.{TArray, TLong, TShortString}
 
   val NodePropSpec = "INTEGER:2,STRING:1,BYTE_ARRAY:1"
   val RelSpec = "FOO:2,BAR:1"
@@ -59,23 +59,11 @@ object ScaleCheck {
       nodesSlim.select(col("id").as("owner"), lit(keyId).as("key_id"),
         lit(seq).as("seq"), lit(ptype0).as("ptype0"),
         vlen.as("vlen"), lit(3).as("max_seq"))
-    import spark.implicits._
-    val neoRows = Seq(
-      (NeoStoreId, NeoNameKey, 0, TShortString, NeoNameLen, 1),
-      (NeoStoreId, NeoTxKey, 1, TLong, 0L, 1))
-      .toDF("owner", "key_id", "seq", "ptype0", "vlen", "max_seq")
-    val rows = propRow(1, 0, TLong, lit(0L))
+    val rows = RecordStores.typed(propRow(1, 0, TLong, lit(0L))
       .unionAll(propRow(2, 1, TLong, lit(0L)))
       .unionAll(propRow(3, 2, TShortString, col("str_len")))
       .unionAll(propRow(4, 3, TArray, col("arr_len")))
-      .unionAll(neoRows)
-      .withColumn("ptype",
-        when(col("ptype0") === TShortString && col("vlen") > BlockSize,
-          lit(TLongString)).otherwise(col("ptype0")))
-      .withColumn("value_ref",
-        when(col("ptype") === TLongString || col("ptype") === TArray,
-          (col("owner") * 16 + col("key_id")) * 8).otherwise(lit(-1L)))
-      .drop("ptype0")
+      .unionAll(RecordStores.neoRows(spark)))
     RecordStores.assemble(spark, nodesSlim.select("id"), rels1, rows,
       relTypeDict, propKeyDict, relNextProp = lit(-1L))
   }

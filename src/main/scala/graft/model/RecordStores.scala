@@ -135,7 +135,8 @@ object RecordSpec {
   }
 }
 
-/** The full record-store bundle the checker runs over. */
+/** The full record-store bundle the checker runs over. [[Stores.Names]]
+  * names each store, in field order. */
 final case class Stores(
   nodes: DataFrame,     // id, in_use, next_rel, next_prop
   rels: DataFrame,      // id, in_use, type_id, first_node, second_node,
@@ -150,20 +151,35 @@ final case class Stores(
   typeNames: DataFrame, // id, in_use, length, next_block
   keyNames: DataFrame   // id, in_use, length, next_block
 ) {
+  /** Every store with its name, in bundle order. */
+  def named: Seq[(String, DataFrame)] =
+    Stores.Names.zip(productIterator.collect { case d: DataFrame => d }.toSeq)
+
   /** Persist every store. A store read by several plans (the full
     * check, its phase slices, a summary) is otherwise re-read from its
     * source by each — e.g. a freshly restored backup's parquet. */
   def persistAll(): Stores = {
-    // collect-then-foreach: Iterator.collect alone is LAZY — a bare
-    // `collect { case d => d.persist() }` never runs the side effect
-    // (the restored bundle then re-reads parquet once per check)
-    productIterator.collect { case d: DataFrame => d }.foreach(_.persist())
+    named.foreach(_._2.persist())
     this
   }
 
   /** Release every store's cache (non-blocking). */
-  def unpersistAll(): Unit =
-    productIterator.collect { case d: DataFrame => d }.foreach(_.unpersist(false))
+  def unpersistAll(): Unit = named.foreach(_._2.unpersist(false))
+}
+
+object Stores {
+  /** Store names in field order; a backup keeps each store in the
+    * directory of its name. */
+  val Names: Seq[String] = Seq("nodes", "rels", "neo", "props", "blocks",
+    "dyns", "arrays", "rel_types", "prop_keys", "type_names", "key_names")
+
+  /** The bundle whose store named `n` is `store(n)`. */
+  def fromNamed(store: String => DataFrame): Stores = {
+    val Seq(nodes, rels, neo, props, blocks, dyns, arrays, relTypes,
+      propKeys, typeNames, keyNames) = Names.map(store)
+    Stores(nodes, rels, neo, props, blocks, dyns, arrays, relTypes,
+      propKeys, typeNames, keyNames)
+  }
 }
 
 object RecordStores {
@@ -276,29 +292,44 @@ object RecordStores {
       .select(col("id").as("owner"), lit(RelNoteKey).as("key_id"),
         lit(1).as("seq"), lit(TShortString).as("ptype0"),
         (lit(5L) + col("id") % 29).as("vlen"), lit(1).as("max_seq"))
-    import spark.implicits._
-    val neoRows = Seq(
-      (NeoStoreId, NeoNameKey, 0, TShortString, NeoNameLen, 1),
-      (NeoStoreId, NeoTxKey, 1, TLong, 0L, 1))
-      .toDF("owner", "key_id", "seq", "ptype0", "vlen", "max_seq")
-    (name +: extras :+ relWeight :+ relNote :+ neoRows).reduce(_ unionAll _)
-      .withColumn("ptype",
-        when(col("ptype0") === TShortString && col("vlen") > BlockSize,
-          lit(TLongString)).otherwise(col("ptype0")))
-      .withColumn("value_ref",
-        when(col("ptype") === TLongString || col("ptype") === TArray,
-          (col("owner") * 16 + col("key_id")) * 8).otherwise(lit(-1L)))
-      .drop("ptype0")
+    typed((name +: extras :+ relWeight :+ relNote :+ neoRows(spark))
+      .reduce(_ unionAll _))
   }
 
+  /** The NeoStore record's two graph properties, `name` and `tx_count`,
+    * as untyped property rows `(owner, key_id, seq, ptype0, vlen,
+    * max_seq)`. */
+  def neoRows(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq((NeoStoreId, NeoNameKey, 0, TShortString, NeoNameLen, 1),
+      (NeoStoreId, NeoTxKey, 1, TLong, 0L, 1))
+      .toDF("owner", "key_id", "seq", "ptype0", "vlen", "max_seq")
+  }
+
+  /** Types untyped property rows: a short string longer than one block
+    * becomes a long string, and every long string or array gets the
+    * dynamic-store chain at `value_ref = (owner·keySpace + key_id)·8`
+    * (8 blocks per value); inlined values get NIL. `keySpace` bounds
+    * the key ids: 16 for the static dictionaries, wider for a
+    * session's observed one. */
+  def typed(rows: DataFrame, keySpace: Long = 16L): DataFrame = rows
+    .withColumn("ptype",
+      when(col("ptype0") === TShortString && col("vlen") > BlockSize,
+        lit(TLongString)).otherwise(col("ptype0")))
+    .withColumn("value_ref",
+      when(col("ptype") === TLongString || col("ptype") === TArray,
+        (col("owner") * keySpace + col("key_id")) * 8).otherwise(lit(-1L)))
+    .drop("ptype0")
+
   /** Incidence list with chain pointers: for each (node, rel) pair the
-    * prev/next relationship in that node's chain (rel-id order). One
-    * window shuffle keyed by node — scales as a single exchange.
+    * prev/next relationship in that node's chain (rel-id order), from
+    * `rels(id, src, dst)`. One window shuffle keyed by node — scales as
+    * a single exchange.
     *
     * A loop relationship (src == dst) participates ONCE in its node's
     * chain: melting it twice would put two identical (node, rel_id)
     * window rows back-to-back and break pointer reciprocity. Its
-    * second-side pointers mirror the first side (see [[assemble]]). */
+    * second-side pointers mirror the first side (see [[chainPointers]]). */
   def incidence(rels: DataFrame): DataFrame = {
     val inc = rels.select(col("src").as("node"), col("id").as("rel_id"), lit(0).as("side"))
       .unionAll(rels.filter(col("src") =!= col("dst"))
@@ -308,6 +339,23 @@ object RecordStores {
       lag("rel_id", 1, -1).over(w).as("prev"),
       lead("rel_id", 1, -1).over(w).as("next"))
   }
+
+  /** Each relationship's four chain pointers from its [[incidence]]
+    * rows: `(rel_id, first_prev, first_next, second_prev, second_next)`.
+    * A loop has no side-1 row: its second-side pointers mirror the
+    * first side (one chain position, both record slots). */
+  def chainPointers(inc: DataFrame): DataFrame = inc.groupBy("rel_id").agg(
+    max(when(col("side") === 0, col("prev"))).as("first_prev"),
+    max(when(col("side") === 0, col("next"))).as("first_next"),
+    coalesce(max(when(col("side") === 1, col("prev"))),
+      max(when(col("side") === 0, col("prev")))).as("second_prev"),
+    coalesce(max(when(col("side") === 1, col("next"))),
+      max(when(col("side") === 0, col("next")))).as("second_next"))
+
+  /** Each node's chain head, its lowest rel id: `(node, min_rel)`. A
+    * node with no relationships has no row. */
+  def chainHeads(inc: DataFrame): DataFrame =
+    inc.groupBy("node").agg(min("rel_id").as("min_rel"))
 
   def typeIdExpr(typeCol: String): org.apache.spark.sql.Column =
     relTypes.foldLeft(when(lit(false), lit(-1))) { case (acc, (id, nm)) =>
@@ -327,10 +375,14 @@ object RecordStores {
   /** Generic record-store assembly from ANY property graph:
     * `nodes0(id, …)`, `rels1(id, src, dst, type_id, …)`, property
     * `rows(owner, key_id, seq, ptype, value_ref, vlen, max_seq)` plus
-    * literal dictionaries. [[derive]] feeds it the TPC-H graph;
-    * [[graft.checker.ScaleCheck]] feeds it the reference's canonical
-    * generated perf workload (10M nodes / 30M rels / 40M props —
-    * enterprise-performance-tests/.../ConsistencyPerformanceCheck.java:76-86).
+    * literal dictionaries. Every record-layout decision is made here:
+    * chain pointers and heads, property-record chunking, dynamic-block
+    * chunking, dictionaries and name stores. [[derive]] feeds it the
+    * TPC-H graph; [[graft.checker.ScaleCheck]] feeds it the reference's
+    * canonical generated perf workload (10M nodes / 30M rels / 40M
+    * props —
+    * enterprise-performance-tests/.../ConsistencyPerformanceCheck.java:76-86);
+    * [[SessionStores]] feeds it a live session's graph.
     *
     * `relNextProp` is the relationship store's property-chain head
     * column: TPC-H rels all carry `weight`, chained at id*4; generated
@@ -343,16 +395,7 @@ object RecordStores {
                relNextProp: org.apache.spark.sql.Column = col("id") * 4,
                tap: DataFrame => DataFrame = identity): Stores = {
     val incPN = tap(incidence(rels1))
-
-    // loops have no side-1 incidence row: their second-side pointers
-    // mirror the first side (one chain position, both record slots)
-    val chain = incPN.groupBy("rel_id").agg(
-      max(when(col("side") === 0, col("prev"))).as("first_prev"),
-      max(when(col("side") === 0, col("next"))).as("first_next"),
-      coalesce(max(when(col("side") === 1, col("prev"))),
-        max(when(col("side") === 0, col("prev")))).as("second_prev"),
-      coalesce(max(when(col("side") === 1, col("next"))),
-        max(when(col("side") === 0, col("next")))).as("second_next"))
+    val chain = chainPointers(incPN)
 
     // when rels own properties their chain head is id*4 — the same
     // arithmetic as nodes (PrimitiveRecordCheck walks both)
@@ -364,7 +407,7 @@ object RecordStores {
         col("second_prev"), col("second_next"),
         relNextProp.as("next_prop"))
 
-    val minRel = incPN.groupBy("node").agg(min("rel_id").as("min_rel"))
+    val minRel = chainHeads(incPN)
     val nodeRecs = nodes0
       .join(minRel, nodes0("id") === minRel("node"), "left")
       .select(nodes0("id"), lit(true).as("in_use"),

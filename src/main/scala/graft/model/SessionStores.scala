@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,21 +13,27 @@ import graft.operators.EngineSession
   * consistency tool reads); here the session's graph materializes into
   * the [[Stores]] shape and every J-check runs unchanged.
   *
-  * Unlike [[RecordStores]] (whose property sets are static spec data),
-  * a session's schema is dynamic: dictionaries are built from the
-  * OBSERVED property keys and rel types (collected to the driver — the
-  * sanctioned S4 small-store materialization), and per-owner property
-  * seqs come from a window over (owner, key) — key-sorted, so the
-  * derivation is deterministic for any session history.
+  * Only what is specific to a session is decided here; the record
+  * layout itself (chain pointers and heads, property records, dynamic
+  * blocks, dictionaries and name stores) is [[RecordStores.assemble]]'s,
+  * so the session image is laid out exactly like the analytic twin.
+  * What a session adds:
   *
-  * Id arithmetic mirrors RecordStores with one widening: value_ref =
-  * (owner·[[KeySpace]] + key_id)·8, because a dynamic dictionary is
-  * not bounded by 16 keys. Graph properties hang off the pseudo-owner
-  * [[GraphOwner]] (= -2, outside the session's non-negative id space;
-  * its record ids are negative, distinct from NIL=-1).
+  *  - dictionaries built from the OBSERVED property keys and rel types
+  *    (collected to the driver — the sanctioned S4 small-store
+  *    materialization), key-sorted for determinism;
+  *  - property rows whose per-owner seqs come from a window over
+  *    (owner, key) — key-sorted, so the derivation is deterministic for
+  *    any session history — with value_ref = (owner·[[KeySpace]] +
+  *    key_id)·8, because a dynamic dictionary is not bounded by 16 keys;
+  *  - NIL property-chain heads for nodes and rels without properties;
+  *  - the NeoStore record at the pseudo-owner [[GraphOwner]] (= -2,
+  *    outside the session's non-negative id space; its property record
+  *    ids are negative, distinct from NIL=-1), holding the graph
+  *    properties.
   */
 object SessionStores {
-  import RecordSpec.{BlockSize, TShortString, TLongString, nameBlocks}
+  import RecordSpec.TShortString
 
   val GraphOwner = -2L
   val KeySpace = 1024L
@@ -45,13 +51,8 @@ object SessionStores {
         snap.graphProps.keys).toSeq.distinct.sorted
     val typeNames: Seq[String] =
       snap.rels.values.map(_._3).toSeq.distinct.sorted
-    val keyId = keyNames.zipWithIndex.toMap
-    val typeId = typeNames.zipWithIndex.toMap
-
-    val keyDict = keyNames.zipWithIndex
-      .map { case (k, i) => (k, i) }.toDF("k", "key_id")
-    val typeDict = typeNames.zipWithIndex
-      .map { case (t, i) => (t, i) }.toDF("t", "type_id")
+    val keyDict = keyNames.zipWithIndex.toDF("k", "key_id")
+    val typeDict = typeNames.zipWithIndex.toDF("t", "type_id")
 
     // property rows: (owner, key, vlen) from all three owner kinds
     val nodeProps = s.nodesDF
@@ -61,109 +62,30 @@ object SessionStores {
     val graphProps = snap.graphProps.toSeq.sortBy(_._1)
       .map { case (k, v) => (GraphOwner, k, v) }
       .toDF("owner", "k", "v")
-      .select(col("owner"), col("k"), col("v"))
-    val rows0 = nodeProps.unionAll(relProps).unionAll(graphProps)
+    val wOwner = Window.partitionBy("owner").orderBy("key_id")
+    val rows = RecordStores.typed(nodeProps.unionAll(relProps).unionAll(graphProps)
       .join(broadcast(keyDict), "k")
       .select(col("owner"), col("key_id"),
+        (row_number().over(wOwner) - 1).as("seq"), lit(TShortString).as("ptype0"),
         length(col("v")).cast("long").as("vlen"))
-    val wOwner = Window.partitionBy("owner").orderBy("key_id")
-    val rows = rows0
-      .withColumn("seq", row_number().over(wOwner) - 1)
-      .withColumn("mseq", max("seq").over(Window.partitionBy("owner")))
-      .withColumn("ptype",
-        when(col("vlen") > BlockSize, lit(TLongString))
-          .otherwise(lit(TShortString)))
-      .withColumn("value_ref",
-        when(col("ptype") === TLongString,
-          (col("owner") * KeySpace + col("key_id")) * 8).otherwise(lit(-1L)))
+      .withColumn("max_seq", max("seq").over(Window.partitionBy("owner"))),
+      KeySpace)
 
-    // incidence → rel chain pointers + node chain heads (same window
-    // derivation as RecordStores.incidence)
-    val relsBase = s.relsDF.select(col("id"), col("src"), col("dst"),
-      col("type"))
-    val inc = relsBase.select(col("src").as("node"), col("id").as("rel_id"),
-        lit(0).as("side"))
-      .unionAll(relsBase.select(col("dst").as("node"), col("id").as("rel_id"),
-        lit(1).as("side")))
-    val wNode = Window.partitionBy("node").orderBy("rel_id")
-    val pn = inc.select(col("node"), col("rel_id"), col("side"),
-      lag("rel_id", 1, -1).over(wNode).as("prev"),
-      lead("rel_id", 1, -1).over(wNode).as("next"))
-    val chain = pn.groupBy("rel_id").agg(
-      max(when(col("side") === 0, col("prev"))).as("first_prev"),
-      max(when(col("side") === 0, col("next"))).as("first_next"),
-      max(when(col("side") === 1, col("prev"))).as("second_prev"),
-      max(when(col("side") === 1, col("next"))).as("second_next"))
-    val minRel = inc.groupBy("node").agg(min("rel_id").as("min_rel"))
+    val rels1 = s.relsDF.join(broadcast(typeDict), col("type") === col("t"))
+      .select(col("id"), col("src"), col("dst"), col("type_id"))
+    val st = RecordStores.assemble(spark, s.nodesDF.select("id"), rels1, rows,
+      typeNames.zipWithIndex.map(_.swap), keyNames.zipWithIndex.map(_.swap))
 
-    // chain heads exist only for owners that HAVE properties
-    val heads = rows.filter(col("seq") === 0)
-      .select(col("owner").as("h_owner"), (col("owner") * 4).as("head"))
-
-    val nodeRecs = s.nodesDF.select(col("id"))
-      .join(minRel, col("id") === col("node"), "left")
-      .join(heads, col("id") === col("h_owner"), "left")
-      .select(col("id"), lit(true).as("in_use"),
-        coalesce(col("min_rel"), lit(-1L)).as("next_rel"),
-        coalesce(col("head"), lit(-1L)).as("next_prop"))
-
-    val relRecs = relsBase
-      .join(broadcast(typeDict), col("type") === col("t"))
-      .join(chain, relsBase("id") === chain("rel_id"))
-      .join(heads, relsBase("id") === col("h_owner"), "left")
-      .select(relsBase("id"), lit(true).as("in_use"), col("type_id"),
-        col("src").as("first_node"), col("dst").as("second_node"),
-        col("first_prev"), col("first_next"),
-        col("second_prev"), col("second_next"),
-        coalesce(col("head"), lit(-1L)).as("next_prop"))
-
-    val neo = Seq((GraphOwner, true,
-      if (snap.graphProps.nonEmpty) GraphOwner * 4 else -1L))
-      .toDF("id", "in_use", "next_prop")
-
-    val propRecs = rows.filter(col("seq") % 4 === 0)
-      .select((col("owner") * 4 + expr("seq div 4")).as("id"),
-        lit(true).as("in_use"), col("owner"),
-        when(expr("seq div 4") === 0, lit(-1L))
-          .otherwise(col("owner") * 4 + expr("seq div 4") - 1).as("prev_prop"),
-        when(expr("seq div 4") === expr("mseq div 4"), lit(-1L))
-          .otherwise(col("owner") * 4 + expr("seq div 4") + 1).as("next_prop"))
-
-    val blocks = rows.select(
-      (col("owner") * 4 + expr("seq div 4")).as("prop_id"),
-      expr("seq % 4").as("idx"),
-      col("key_id"), col("ptype"), col("value_ref"), col("vlen"))
-
-    val dyns = rows.filter(col("ptype") === TLongString)
-      .select(col("value_ref"), col("vlen"),
-        expr(s"(vlen + ${BlockSize - 1}) div $BlockSize").as("nb"))
-      .select(col("value_ref"), col("vlen"), col("nb"),
-        explode(sequence(lit(0L), col("nb") - 1)).as("j"))
-      .select((col("value_ref") + col("j")).as("id"), lit(true).as("in_use"),
-        when(col("j") < col("nb") - 1, lit(BlockSize.toLong))
-          .otherwise(col("vlen") - lit(BlockSize) * (col("nb") - 1)).as("length"),
-        when(col("j") < col("nb") - 1, col("value_ref") + col("j") + 1)
-          .otherwise(lit(-1L)).as("next_block"))
-
-    val emptyDyn = Seq.empty[(Long, Boolean, Long, Long)]
-      .toDF("id", "in_use", "length", "next_block")
-
-    val relTypesDF = typeNames.map(t => (typeId(t).toLong, true, typeId(t).toLong * 8))
-      .toDF("id", "in_use", "name_id")
-    val propKeysDF = keyNames.map(k => (keyId(k).toLong, true, keyId(k).toLong * 8))
-      .toDF("id", "in_use", "name_id")
-    val typeNamesDF =
-      (if (typeNames.isEmpty) Seq.empty
-       else typeNames.flatMap(t => nameBlocks(typeId(t), t)))
-        .toDF("id", "in_use", "length", "next_block")
-    val keyNamesDF =
-      (if (keyNames.isEmpty) Seq.empty
-       else keyNames.flatMap(k => nameBlocks(keyId(k), k)))
-        .toDF("id", "in_use", "length", "next_block")
-
-    Stores(nodeRecs, relRecs, neo, propRecs, blocks, dyns,
-      arrays = emptyDyn,
-      relTypes = relTypesDF, propKeys = propKeysDF,
-      typeNames = typeNamesDF, keyNames = keyNamesDF)
+    // an entity without properties has no chain: its head is NIL
+    def headless(ids: Iterable[Long]): Column =
+      when(col("id").isin(ids.toSeq: _*), lit(-1L)).otherwise(col("next_prop"))
+    st.copy(
+      nodes = st.nodes.withColumn("next_prop",
+        headless(snap.nodes.collect { case (id, ps) if ps.isEmpty => id })),
+      rels = st.rels.withColumn("next_prop",
+        headless(snap.rels.collect { case (id, r) if r._4.isEmpty => id })),
+      neo = Seq((GraphOwner, true,
+        if (snap.graphProps.nonEmpty) GraphOwner * 4 else -1L))
+        .toDF("id", "in_use", "next_prop"))
   }
 }

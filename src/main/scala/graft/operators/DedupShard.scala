@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *    delta pushed over the cap (df_base ≤ MaxDf < df_base+df_delta) —
   *    delta keys, so the correction (`over`) also reads touched shards
   *    only. nb = size0 − over.
-  * DedupShardSpec asserts the equality against batchPairs row-for-row;
+  * DedupStreamSpec asserts the equality against batchPairs row-for-row;
   * `dd_shard_probe` hash-gates it against the SAME DuckDB oracle as
   * `dd_incremental` every round.
   *
@@ -88,7 +88,7 @@ object DedupShard {
     * tables. Partition pruning on `shard`/`dshard` still happens at
     * PLANNING time per probe — the cached listing carries the
     * partition values, so pruned scans are unaffected (plan-pinned in
-    * DedupShardSpec). Reference analog: the maintained-index contract
+    * Round10OpsSpec and Round11OpsSpec). Reference analog: the maintained-index contract
     * of checking/incremental/IncrementalDiffCheck.java:55 — the index
     * is long-lived state, only the delta's work recurs. */
   private val tablesMemo = new graft.SessionMemo[(DataFrame, DataFrame, DataFrame)]

@@ -237,9 +237,7 @@ object Backup {
   }
 
   // ---- record-store backup (the graph store itself) -------------------
-
-  private val storeNames = Seq("nodes", "rels", "neo", "props", "blocks",
-    "dyns", "arrays", "rel_types", "prop_keys", "type_names", "key_names")
+  // one parquet directory per store, named by Stores.Names
 
   /** monotone record-id column per store — the per-store watermark key
     * (blocks have no record id of their own; they are keyed by the
@@ -265,7 +263,7 @@ object Backup {
   private def writeStoreWatermarks(dir: String, w: Map[String, Long]): Unit = {
     Files.createDirectories(Paths.get(dir))
     Files.writeString(storeWatermarksPath(dir),
-      storeNames.flatMap(n => w.get(n).map(v => s"$n=$v")).mkString("\n"))
+      Stores.Names.flatMap(n => w.get(n).map(v => s"$n=$v")).mkString("\n"))
   }
 
   /** S5 proper: the reference's full backup streams ALL store files —
@@ -275,10 +273,6 @@ object Backup {
     * Snapshot every store of the bundle as parquet, stamped with the
     * store id. Each store writes partition-parallel; nothing funnels
     * through the driver. */
-  private[streaming] def storeSeq(s: Stores): Seq[(String, DataFrame)] =
-    storeNames.zip(Seq(s.nodes, s.rels, s.neo, s.props, s.blocks, s.dyns,
-      s.arrays, s.relTypes, s.propKeys, s.typeNames, s.keyNames))
-
   def fullStores(s: Stores, dir: String,
                  storeId: String = DefaultStoreId): Unit = {
     // Each store snapshots to its own path, so the per-store write +
@@ -292,7 +286,7 @@ object Backup {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     try {
-      val futures = storeSeq(s).map { case (n, df) =>
+      val futures = s.named.map { case (n, df) =>
         scala.concurrent.Future {
           df.write.mode("overwrite").parquet(s"$dir/$n")
           val idc = storeIdCol(n)
@@ -337,7 +331,7 @@ object Backup {
     if (marks.isEmpty)
       throw new IllegalStateException(
         s"incrementalStores refused: backup at $dir has no per-store watermarks — take a full backup first")
-    val shipped = storeSeq(s).map { case (n, df) =>
+    val shipped = s.named.map { case (n, df) =>
       val idc = storeIdCol(n)
       val last = marks.getOrElse(n, -1L)
       val inc = df.filter(col(idc) > last)
@@ -361,13 +355,10 @@ object Backup {
     // torn-backup refusal, store-file edition: a bundle missing any
     // store is a copy that died mid-stream — the reference refuses to
     // operate on it (ConsistencyCheckTool.java:70-163)
-    val missing = storeNames.filterNot(n => Files.exists(Paths.get(dir, n)))
+    val missing = Stores.Names.filterNot(n => Files.exists(Paths.get(dir, n)))
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"restoreStores refused: backup at $dir is missing store file(s) ${missing.mkString(", ")} — torn copy; re-run a full backup")
-    def rd(n: String) = spark.read.parquet(s"$dir/$n")
-    Stores(rd("nodes"), rd("rels"), rd("neo"), rd("props"), rd("blocks"),
-      rd("dyns"), rd("arrays"), rd("rel_types"), rd("prop_keys"),
-      rd("type_names"), rd("key_names"))
+    Stores.fromNamed(n => spark.read.parquet(s"$dir/$n"))
   }
 }

@@ -76,4 +76,19 @@ class RepairSpec extends SparkTestBase {
     }
     assert(chainViolations.isEmpty, v.toString)
   }
+
+  test("a self-loop in an assembled store needs no repair") {
+    import spark.implicits._
+    val nodes = Seq(1L, 2L).toDF("id")
+    // rel 10 is a loop on node 1; rel 11 shares node 1's chain with it
+    val rels = Seq((10L, 1L, 1L, 0), (11L, 1L, 2L, 0))
+      .toDF("id", "src", "dst", "type_id")
+    // one inlined property per node and one on the NeoStore record
+    val rows = Seq(0L, 1L, 2L).map(o => (o, 0, 0, 1, -1L, 0L, 0))
+      .toDF("owner", "key_id", "seq", "ptype", "value_ref", "vlen", "max_seq")
+    val s = RecordStores.assemble(spark, nodes, rels, rows,
+      Seq(0 -> "LINK"), Seq(0 -> "name"), relNextProp = lit(-1L))
+    assert(FullCheck.violations(s).count() === 0L)
+    assert(Repair.chainRepairs(s).count() === 0L)
+  }
 }

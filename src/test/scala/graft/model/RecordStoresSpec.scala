@@ -84,4 +84,13 @@ class RecordStoresSpec extends SparkTestBase {
       assert(row.getAs[Long]("mem_bytes") + row.getAs[Long]("disk_bytes") > 0L)
     } finally { probe.unpersist(); () }
   }
+
+  test("Stores.Names names each store after its field, in field order") {
+    val s = RecordStores.derive(spark, dir)
+    val fields = s.productElementNames
+      .map(_.replaceAll("([A-Z])", "_$1").toLowerCase).toSeq
+    assert(s.named.map(_._1) === fields)
+    val back = Stores.fromNamed(s.named.toMap)
+    assert(back.named.map(_._2).zip(s.named.map(_._2)).forall { case (a, b) => a eq b })
+  }
 }

@@ -61,4 +61,17 @@ class SessionStoresSpec extends SparkTestBase {
     tx.success(); tx.finish()
     assert(FullCheck.violations(SessionStores.derive(s)).count() === 0L)
   }
+
+  test("a session with a self-loop derives to a violation-free record image") {
+    val s = new EngineSession(spark)
+    val tx = s.beginTx()
+    val a = tx.createNode(); val b = tx.createNode()
+    tx.createRelationship(a, a, "KNOWS")
+    // two parallel rels share a's chain with the loop
+    tx.createRelationship(a, b, "KNOWS")
+    tx.createRelationship(a, b, "KNOWS")
+    tx.setProperty(a, "name", "alice")
+    tx.success(); tx.finish()
+    assert(FullCheck.violations(SessionStores.derive(s)).count() === 0L)
+  }
 }

@@ -16,9 +16,12 @@ class Round9OpsSpec extends SparkTestBase {
     val M = 2000000L
     // two identical docs of M repeated tokens — every gram lands in
     // (at most) two buckets, so tc/rc concentrate far past the wrap
-    // threshold while the corpus stays a 2-row DataFrame
+    // threshold while the corpus stays a 2-row DataFrame. The count
+    // reads the row (id ≤ 1 < M, so it is M) so Catalyst cannot fold
+    // the array into a 2M-element literal shipped inside every task;
+    // `id * 0 + M` would still fold
     val toks = spark.range(2).select(col("id").as("doc_id"),
-      array_repeat(lit("x"), M.toInt).as("t"))
+      array_repeat(lit("x"), greatest(col("id").cast("int"), lit(M.toInt))).as("t"))
     val target = spark.range(1).select(col("id").as("doc_id"))
 
     // expected values in exact BigInt arithmetic, using the engine's
