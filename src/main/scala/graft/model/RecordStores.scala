@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -191,21 +191,16 @@ object RecordStores {
     * PER READER. One cached derivation per sf dir (dimension stores are
     * literal, no need). */
   private val cached = new graft.SessionMemo[Stores]
-  private def slog(msg: => String): Unit =
-    if (sys.env.contains("GRAFT_ITER_LOG"))
-      println(f"[stores] t=${System.currentTimeMillis() % 1000000}%d $msg")
   def deriveCached(spark: SparkSession, dir: String): Stores =
     cached.getOrElseUpdate(spark, dir) {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      slog("deriveCached enter")
       // tap persists the shared intermediates (rels-with-ids, incidence
       // windows, prop rows): five stores otherwise re-derive them once
       // each during cache fill
       val taps = scala.collection.mutable.ArrayBuffer[DataFrame]()
       val s = derive(spark, dir, tap = { d => val p = d.persist(); taps += p; p })
-      slog("derive() plan built")
       // taps arrive in derive() call order: rels-with-ids, propRows,
       // incidence (the last tapped inside assemble()). incidence depends
       // on rels; propRows is independent — fill the two chains
@@ -214,9 +209,8 @@ object RecordStores {
       // work).
       val Seq(rels0, rows, incPN) = taps.toSeq
       Await.result(Future.sequence(Seq(
-        Future { rels0.count(); slog("tap rels0 filled")
-                 incPN.count(); slog("tap inc filled") },
-        Future { rows.count(); slog("tap rows filled") })), Duration.Inf)
+        Future { rels0.count(); incPN.count() },
+        Future { rows.count() })), Duration.Inf)
       // Each store ends in repartition-by-id + eager localCheckpoint:
       // the checkpoint truncates the derivation out of the logical plan
       // (the full check — and every later query over the stores —
@@ -231,17 +225,12 @@ object RecordStores {
         "blocks" -> s.blocks.repartition(col("prop_id")),
         "dyns" -> s.dyns.repartition(col("id")),
         "arrays" -> s.arrays.repartition(col("id"))
-      ).map { case (n, df) => Future {
-        val t0 = System.nanoTime()
-        val c = df.localCheckpoint(true)
-        slog(f"$n fill ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        n -> c
-      } }), Duration.Inf).toMap
+      ).map { case (n, df) => Future(n -> df.localCheckpoint(true)) }),
+        Duration.Inf).toMap
       // stores are now self-contained RDDs; the tap caches only served
       // the fill and would otherwise hold memory for the whole session
       // (neo is a one-row literal — nothing to checkpoint)
       taps.foreach(_.unpersist())
-      slog("fills done")
       s.copy(nodes = ckpt("nodes"), rels = ckpt("rels"),
         props = ckpt("props"), blocks = ckpt("blocks"), dyns = ckpt("dyns"),
         arrays = ckpt("arrays"))
@@ -306,19 +295,35 @@ object RecordStores {
       .toDF("owner", "key_id", "seq", "ptype0", "vlen", "max_seq")
   }
 
+  /** Id offset of block `j` of a dynamic chain from its head. A chain
+    * head is a block on an id ≡ 0 (mod 8) (the J15 orphan-chain rule),
+    * so past its first 8 blocks a chain skips those ids: block 8 sits
+    * at offset 9. Chains of at most 8 blocks are contiguous. */
+  private def blockOffset(j: Column): Column = j + (j - 1).divide(7).cast("long")
+
+  /** Ids a value of `blocks` dynamic blocks spans from its head,
+    * rounded up to the next head slot: the `value_ref` spacing that
+    * keeps such values' chains apart. */
+  def valueSpacing(blocks: Long): Long = {
+    val span = blocks + (blocks - 2) / 7
+    math.max(8L, (span + 7) / 8 * 8)
+  }
+
   /** Types untyped property rows: a short string longer than one block
     * becomes a long string, and every long string or array gets the
-    * dynamic-store chain at `value_ref = (owner·keySpace + key_id)·8`
-    * (8 blocks per value); inlined values get NIL. `keySpace` bounds
-    * the key ids: 16 for the static dictionaries, wider for a
-    * session's observed one. */
-  def typed(rows: DataFrame, keySpace: Long = 16L): DataFrame = rows
+    * dynamic-store chain at `value_ref = (owner·keySpace + key_id)·
+    * spacing`; inlined values get NIL. `keySpace` bounds the key ids: 16
+    * for the static dictionaries, wider for a session's observed one.
+    * `spacing` is 8 ids (8 blocks, 128 chars) for the generated stores,
+    * whose values are shorter; a session passes the [[valueSpacing]] of
+    * its longest value. */
+  def typed(rows: DataFrame, keySpace: Long = 16L, spacing: Long = 8L): DataFrame = rows
     .withColumn("ptype",
       when(col("ptype0") === TShortString && col("vlen") > BlockSize,
         lit(TLongString)).otherwise(col("ptype0")))
     .withColumn("value_ref",
       when(col("ptype") === TLongString || col("ptype") === TArray,
-        (col("owner") * keySpace + col("key_id")) * 8).otherwise(lit(-1L)))
+        (col("owner") * keySpace + col("key_id")) * spacing).otherwise(lit(-1L)))
     .drop("ptype0")
 
   /** Incidence list with chain pointers: for each (node, rel) pair the
@@ -443,10 +448,10 @@ object RecordStores {
         expr(s"(vlen + ${BlockSize - 1}) div $BlockSize").as("nb"))
       .select(col("value_ref"), col("vlen"), col("nb"),
         explode(sequence(lit(0L), col("nb") - 1)).as("j"))
-      .select((col("value_ref") + col("j")).as("id"), lit(true).as("in_use"),
+      .select((col("value_ref") + blockOffset(col("j"))).as("id"), lit(true).as("in_use"),
         when(col("j") < col("nb") - 1, lit(BlockSize.toLong))
           .otherwise(col("vlen") - lit(BlockSize) * (col("nb") - 1)).as("length"),
-        when(col("j") < col("nb") - 1, col("value_ref") + col("j") + 1)
+        when(col("j") < col("nb") - 1, col("value_ref") + blockOffset(col("j") + 1))
           .otherwise(lit(-1L)).as("next_block"))
     val dyns = chunked(TLongString)
     val arrays = chunked(TArray)

@@ -25,7 +25,10 @@ import graft.operators.EngineSession
   *  - property rows whose per-owner seqs come from a window over
   *    (owner, key) — key-sorted, so the derivation is deterministic for
   *    any session history — with value_ref = (owner·[[KeySpace]] +
-  *    key_id)·8, because a dynamic dictionary is not bounded by 16 keys;
+  *    key_id)·spacing, because a dynamic dictionary is not bounded by
+  *    16 keys and a session string by 128 chars: the spacing covers the
+  *    session's longest value (at least the generated stores' 8 ids),
+  *    so no two values' dynamic chains share a record id;
   *  - NIL property-chain heads for nodes and rels without properties;
   *  - the NeoStore record at the pseudo-owner [[GraphOwner]] (= -2,
   *    outside the session's non-negative id space; its property record
@@ -37,6 +40,14 @@ object SessionStores {
 
   val GraphOwner = -2L
   val KeySpace = 1024L
+
+  /** dynamic-store ids reserved per value: enough for the longest one */
+  private def spacing(snap: EngineSession.GraphSnapshot): Long = {
+    val values = snap.nodes.values.flatMap(_.values) ++
+      snap.rels.values.flatMap(_._4.values) ++ snap.graphProps.values
+    val longest = values.map(_.length).maxOption.getOrElse(0)
+    RecordStores.valueSpacing((longest + RecordSpec.BlockSize - 1) / RecordSpec.BlockSize)
+  }
 
   def derive(s: EngineSession): Stores = {
     val spark: SparkSession = s.nodesDF.sparkSession
@@ -69,7 +80,7 @@ object SessionStores {
         (row_number().over(wOwner) - 1).as("seq"), lit(TShortString).as("ptype0"),
         length(col("v")).cast("long").as("vlen"))
       .withColumn("max_seq", max("seq").over(Window.partitionBy("owner"))),
-      KeySpace)
+      KeySpace, spacing(snap))
 
     val rels1 = s.relsDF.join(broadcast(typeDict), col("type") === col("t"))
       .select(col("id"), col("src"), col("dst"), col("type_id"))

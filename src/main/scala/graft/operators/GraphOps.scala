@@ -581,8 +581,7 @@ object GraphOps {
     // eager localCheckpoint per round, NOT persist: a round references
     // its predecessor ~15× (deg ×2, orientation, support join), so an
     // un-truncated lineage grows ~15^rounds plan nodes and OOMs the
-    // driver during ANALYSIS before a single task runs (the same
-    // reason Iterative.iterateMin checkpoints each frontier).
+    // driver during ANALYSIS before a single task runs.
     var und = li.select(col("ok"), col("pk").as("a"))
       .join(li.select(col("ok"), col("pk").as("b")), "ok")
       .filter(col("a") < col("b"))

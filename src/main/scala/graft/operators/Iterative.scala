@@ -1,21 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import graft.model.TpchGraph
 
-/** Iterative whole-graph analytics as convergent DataFrame self-joins
-  * (SURVEY.md §1.6 "traversal/expand"; the GraphX-Pregel shape
-  * expressed DataFrame-first so Catalyst/AQE own every iteration).
+/** Iterative whole-graph analytics (SURVEY.md §1.6 "traversal/expand";
+  * the Pregel/Pregelix superstep shape).
   *
-  * Both operators are bounded min-propagation rounds: each round is one
-  * shuffle keyed by the destination node (join + groupBy share the
-  * key, so at scale each round is a single exchange over the edge
-  * table). The iteration count is FIXED — the DuckDB oracle unrolls
-  * the same number of rounds, so results compare exactly even short of
-  * convergence. Labels are integers (min is order-insensitive), never
-  * floats.
+  * The min-propagation fixpoints (CC, BFS, SSSP, the converged-CC jump
+  * loop, dedup clusters) run on one round driver, [[minFixpoint]]:
+  * vertex state co-partitioned with an adjacency built once per call,
+  * one Spark job and one message exchange per round, no Catalyst
+  * planning inside the loop. LPA, the k-core peel and MIS still run
+  * DataFrame rounds. The iteration count is FIXED — the DuckDB oracle
+  * unrolls the same number of rounds, so results compare exactly even
+  * short of convergence. Labels are integers (min is order-insensitive),
+  * never floats.
   */
 object Iterative {
   val CcIters = 6
@@ -26,13 +31,12 @@ object Iterative {
   val KcoreIters = 4
   val Unreachable = 999999L
 
-  /** Frontier/message rows above which the per-round broadcast hint is
-    * dropped and the round joins co-partitioned instead. Round 0 of
-    * connected components has the ENTIRE vertex set as its frontier, so
-    * an unconditional hint is a guaranteed driver/executor OOM at 100×
-    * scale; below the cap (~64 MB of (node,label) pairs) the broadcast
-    * is the same map-side join AQE would pick. Overridable per session
-    * for tests and for clusters with more driver headroom. */
+  /** Row count above which a DataFrame round's broadcast hint is
+    * dropped and the round joins co-partitioned instead (~64 MB of
+    * (node, label) pairs). Read by the rounds not on [[minFixpoint]]:
+    * [[lpaRounds]], [[peelLevel]], the MIS rounds, and the SCC and HITS
+    * loops. Overridable per session for tests and for clusters with
+    * more driver headroom. */
   val BroadcastMaxRowsKey = "graft.iterative.broadcastMaxRows"
   val BroadcastMaxRowsDefault = 2000000L
 
@@ -66,7 +70,7 @@ object Iterative {
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
 
   /** whole-graph symmetrized edges, hash-partitioned by src (the
-    * frontier-join key of [[iterateCost]]) */
+    * frontier-join key of the DataFrame rounds that read it) */
   private[graft] def symAllSrc(spark: SparkSession, dir: String): DataFrame =
     memoEdges(spark, dir, "symAllSrc")(
       coPartitioned(symmetrize(TpchGraph.relsLite(spark, dir)), "src"))
@@ -113,135 +117,220 @@ object Iterative {
   private[graft] def hinted(df: DataFrame, rows: Long, maxRows: Long): DataFrame =
     if (rows <= maxRows) broadcast(df) else df
 
-  private def itLog(msg: => String): Unit =
-    if (sys.env.contains("GRAFT_ITER_LOG")) println(s"[iter] $msg")
+  /** One partition of a fixpoint's vertex state. `node`/`label` are the
+    * vertex rows, duplicates kept; `fNode`/`fLabel` are the frontier,
+    * the `(node, label)` rows that send messages next round: the rows
+    * whose label changed last round, or the seed frontier before round 0
+    * (which may name nodes that have no vertex row). */
+  private[graft] final class VertexBlock(val node: Array[Long], val label: Array[Long],
+      val fNode: Array[Long], val fLabel: Array[Long]) extends Serializable {
 
-  /** Delta (frontier) iteration: only labels that CHANGED last round
-    * propagate. Exact for monotone min-propagation (any round-k
-    * improvement arrives via a node improved at round k-1), so each
-    * round's labels equal full propagation — the oracle's unrolled
-    * full rounds still compare bit-for-bit. The frontier collapses
-    * fast (BFS over this corpus: 5 → 25 → 1.6k → 15k → 2k → 0), so
-    * once collapsed every round is two small broadcasts against the
-    * cached edge table plus one partial-agg shuffle; rounds whose
-    * frontier exceeds [[BroadcastMaxRowsKey]] (CC round 0 = all
-    * vertices) join co-partitioned instead — the full label table is
-    * never force-broadcast. `frontier0` lets BFS seed with just the
-    * sources (sentinel labels can never improve a neighbor).
-    *
-    * Each round ends in a `localCheckpoint`, not persist+count:
-    * round k+1 references round k TWICE (labels and frontier), so
-    * without lineage truncation the logical plan doubles per round —
-    * caching shortcuts re-EXECUTION, but Catalyst still re-analyzes an
-    * exponentially growing tree, and by round ~6 driver-side planning
-    * dwarfs the actual work. Checkpointing pins each round to a
-    * constant-size LogicalRDD; superseded rounds are dropped when their
-    * reference goes (ContextCleaner), and the edge table stays persisted
-    * across all rounds — the iterate-over-cached-edges shape GraphX
-    * uses, valid at any cluster size. The checkpoint is LAZY: the
-    * round's frontier count is the action that pins the block, so each
-    * round runs ONE job (round shuffle + checkpoint write + count).
-    *
-    * `round(v, frontier, frontierRows)` builds one round's
-    * (node, label, newl) table; this loop owns everything around it.
-    * The round-0 frontier is `frontier0`, or all of `v0` without one. */
-  private def frontierLoop(v0: DataFrame, frontier0: Option[DataFrame],
-                           iters: Int, tag: String)(
-      round: (DataFrame, DataFrame, Long) => DataFrame): DataFrame = {
-    // LAZY checkpoint: v is first touched by round 0, whose frontier
-    // count pins the block — eager materialization here was a serial
-    // full-vertex job before any round started
-    var v = v0.localCheckpoint(false)
-    var frontier = frontier0.getOrElse(v)
-    // count over checkpointed rows (or the seed filter) — one cheap
-    // scan per round that buys the broadcast-vs-shuffle decision
-    var frontierRows = frontier.count()
-    var r = 0
-    // early exit on an empty frontier: with no improved labels there
-    // are no messages, so every remaining round is a no-op — the
-    // result is bit-identical to the oracle's full unroll, and the
-    // converged tail costs zero jobs instead of 2·rounds
-    while (r < iters && frontierRows > 0) {
-      val t0 = System.nanoTime()
-      val joined = round(v, frontier, frontierRows).localCheckpoint(false)
-      frontier = joined.filter(col("newl") < col("label"))
-        .select(col("node"), col("newl").as("label"))
-      frontierRows = frontier.count()
-      itLog(s"${tag}round $r (frontier=$frontierRows): ${(System.nanoTime() - t0) / 1e9}s")
-      v = joined.select(col("node"), col("newl").as("label"))
-      r += 1
+    /** The next block: each row's label lowered to its message (`msg`,
+      * node → min message), the lowered rows as the new frontier.
+      * Messages to nodes without a row are dropped. */
+    def lower(msg: scala.collection.mutable.LongMap[Long]): VertexBlock = {
+      val next = label.clone()
+      val fn = Array.newBuilder[Long]
+      val fl = Array.newBuilder[Long]
+      var i = 0
+      while (i < node.length) {
+        val m = msg.getOrElse(node(i), Long.MaxValue)
+        if (m < next(i)) { next(i) = m; fn += node(i); fl += m }
+        i += 1
+      }
+      new VertexBlock(node, next, fn.result(), fl.result())
     }
-    v
-  }
 
-  /** One min-propagation round, un-checkpointed — factored out so the
-    * plan-shape spec can pin the join strategy directly: small
-    * frontiers broadcast, large frontiers (round 0 of CC is ALL
-    * vertices) must not. The aggregated message table `m` is guarded by
-    * the same frontier count: its row bound is the frontier's
-    * neighbourhood, so when the frontier is large neither side may
-    * broadcast (AQE still map-side-joins a genuinely small `m` at
-    * runtime — dropping the hint only removes the forced plan). */
-  private[graft] def costRound(v: DataFrame, frontier: DataFrame,
-                               edges: DataFrame, cost: Column,
-                               frontierRows: Long, maxRows: Long): DataFrame = {
-    val m = edges
-      .join(hinted(frontier.select(col("node").as("n2"), col("label")),
-        frontierRows, maxRows), col("src") === col("n2"))
-      .groupBy(col("dst").as("node"))
-      .agg(min(cost).as("minl"))
-    v.join(hinted(m, frontierRows, maxRows), Seq("node"), "left")
-      .select(col("node"), col("label"),
-        least(col("label"), coalesce(col("minl"), col("label"))).as("newl"))
-  }
-
-  private[graft] def minRound(v: DataFrame, frontier: DataFrame,
-                              edges: DataFrame, delta: Long,
-                              frontierRows: Long, maxRows: Long): DataFrame =
-    costRound(v, frontier, edges, col("label") + delta, frontierRows, maxRows)
-
-  /** Min-cost propagation over [[frontierLoop]]. The frontier
-    * optimization stays exact for any non-negative edge cost: a round-k
-    * improvement at v arrives via a neighbor u whose label improved at
-    * round k-1 (otherwise the same message existed at k-1 and v would
-    * already hold it), so relaxing only frontier-out edges yields
-    * exactly the full round-k Bellman-Ford labels. */
-  private def iterateCost(v0: DataFrame, edges0: DataFrame, iters: Int,
-                          cost: Column, frontier0: Option[DataFrame],
-                          prepared: Boolean = false): DataFrame = {
-    val maxRows = broadcastMaxRows(v0.sparkSession)
-    // hash-partition the edge table by src ONCE before caching: the
-    // cached InMemoryRelation keeps that outputPartitioning, so rounds
-    // whose frontier exceeds the broadcast cap join co-partitioned
-    // WITHOUT re-shuffling the (large) edge side — only the frontier
-    // moves. Broadcast rounds ignore it; one upfront exchange buys
-    // every large round. (Bipartite corpora make large rounds the
-    // common case — see SCALE.md's oscillation caveat.)
-    // `prepared` callers pass a session-memoized table already in this
-    // shape — it is shared across queries/runs and NOT unpersisted here.
-    val edges = if (prepared) edges0 else coPartitioned(edges0, "src").persist()
-    val v = frontierLoop(v0, frontier0, iters, "") { (v, frontier, frontierRows) =>
-      costRound(v, frontier, edges, cost, frontierRows, maxRows)
+    /** node → label of this block's rows; one row per node assumed */
+    def labels: scala.collection.mutable.LongMap[Long] = {
+      val m = new scala.collection.mutable.LongMap[Long](node.length)
+      var i = 0
+      while (i < node.length) { m(node(i)) = label(i); i += 1 }
+      m
     }
-    if (!prepared) edges.unpersist()
-    v
   }
 
+  /** One partition of a fixpoint's adjacency: out-edges `(dst, w)` of
+    * the sorted distinct sources `src`, edges of `src(i)` at
+    * `start(i) until start(i + 1)`. Parallel edges are kept. */
+  private[graft] final class AdjBlock(val src: Array[Long], val start: Array[Int],
+      val dst: Array[Long], val w: Array[Long]) extends Serializable {
+
+    /** every `(dst, label + w)` message from the frontier rows */
+    def relax(fNode: Array[Long], fLabel: Array[Long]): Iterator[(Long, Long)] =
+      fNode.indices.iterator.flatMap { i =>
+        val k = java.util.Arrays.binarySearch(src, fNode(i))
+        if (k < 0) Iterator.empty
+        else (start(k) until start(k + 1)).iterator.map(j => (dst(j), fLabel(i) + w(j)))
+      }
+  }
+
+  private object AdjBlock {
+    /** from one partition's edges, sorted by src */
+    def apply(it: Iterator[(Long, (Long, Long))]): AdjBlock = {
+      val src = Array.newBuilder[Long]
+      val start = Array.newBuilder[Int]
+      val dst = Array.newBuilder[Long]
+      val w = Array.newBuilder[Long]
+      var n = 0
+      var last = 0L
+      it.foreach { case (s, (d, c)) =>
+        if (n == 0 || s != last) { src += s; start += n; last = s }
+        dst += d; w += c; n += 1
+      }
+      start += n
+      new AdjBlock(src.result(), start.result(), dst.result(), w.result())
+    }
+  }
+
+  /** `(a, b)` rows of two long-valued columns, without a Row per record */
+  private def longPairs(df: DataFrame, a: Column, b: Column): RDD[(Long, Long)] =
+    df.select(a.cast("long"), b.cast("long")).queryExecution.toRdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+
+  /** `(node, label)` rows hash-partitioned by node, one array pair per
+    * partition */
+  private def byNode(rows: RDD[(Long, Long)], part: Partitioner): RDD[(Array[Long], Array[Long])] =
+    rows.partitionBy(part).mapPartitions({ it =>
+      val n = Array.newBuilder[Long]
+      val l = Array.newBuilder[Long]
+      it.foreach { case (a, b) => n += a; l += b }
+      Iterator((n.result(), l.result()))
+    }, preservesPartitioning = true)
+
+  /** The round driver of every min-propagation fixpoint. Vertex state
+    * ([[VertexBlock]]s) and the adjacency ([[AdjBlock]]s, built once
+    * per call from `edges(src, dst, w)`) share one
+    * `HashPartitioner(defaultParallelism)`, so each round is ONE Spark
+    * job: a narrow zip of the frontier with its adjacency, one
+    * map-side-combined `reduceByKey(min)` exchange of the messages, and
+    * a narrow zip of the messages into the state that also counts the
+    * new frontier. The job's result stage writes the round's
+    * `localCheckpoint`, so the state's lineage never grows, and the
+    * superseded round's blocks are dropped as soon as the new round is
+    * pinned. An empty frontier ends the loop. Nothing is planned by
+    * Catalyst inside the loop, and neither state nor edges reach the
+    * driver: only one frontier count per round does.
+    *
+    * Round 0's frontier is `frontier0`'s rows, or all of `v0` without
+    * one. Each round lowers every vertex row to the minimum message
+    * `label + w` sent to its node by the frontier, so round k's labels
+    * equal the unrolled round k of the join plan
+    * `v ⟕ min(frontier ⋈ edges)`, duplicate rows and parallel edges
+    * included. `shortcut` adds the pointer jump of [[iterateMinJump]]
+    * to each round: a second exchange in the same job.
+    *
+    * Each job's description is `fixpoint <tag> round <r>: frontier <n>`
+    * (`fixpoint <tag> load` for the job that partitions `v0`); the
+    * caller's description is restored on return and its job group is
+    * left alone. Output: `(node, label)`, `node` typed as in `v0`,
+    * `label` a long. */
+  private def minFixpoint(v0: DataFrame, frontier0: Option[DataFrame],
+                          edges: DataFrame, iters: Int, tag: String,
+                          shortcut: Boolean = false): DataFrame = {
+    val spark = v0.sparkSession
+    val sc = spark.sparkContext
+    val part = new HashPartitioner(sc.defaultParallelism)
+    val vertices = byNode(longPairs(v0, col("node"), col("label")), part)
+    val state0 = frontier0 match {
+      case None => vertices.mapPartitions(_.map { case (n, l) =>
+        new VertexBlock(n, l, n, l) }, preservesPartitioning = true)
+      case Some(f) =>
+        vertices.zipPartitions(byNode(longPairs(f, col("node"), col("label")), part),
+          preservesPartitioning = true) { (vs, fs) =>
+          val (n, l) = vs.next(); val (fn, fl) = fs.next()
+          Iterator(new VertexBlock(n, l, fn, fl))
+        }
+    }
+    val adj = edges.select(col("src").cast("long"), col("dst").cast("long"),
+        col("w").cast("long")).queryExecution.toRdd
+      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
+      .setName(FixpointEdgesName)
+      .repartitionAndSortWithinPartitions(part)
+      .mapPartitions(it => Iterator(AdjBlock(it)), preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+    def round(state: RDD[VertexBlock]): RDD[VertexBlock] = {
+      val hook = state.zipPartitions(adj) { (bs, as) =>
+        val b = bs.next(); as.next().relax(b.fNode, b.fLabel)
+      }
+      // shortcut: every row asks the row of the node its label names
+      // for that node's label (l(v) <- l(l(v))), answered in place
+      val messages = if (!shortcut) hook else hook.union(
+        state.flatMap(b => b.node.indices.iterator.collect {
+            case i if b.label(i) != b.node(i) => (b.label(i), b.node(i)) })
+          .partitionBy(part)
+          .zipPartitions(state) { (asks, bs) =>
+            val labels = bs.next().labels
+            asks.flatMap { case (target, n) => labels.get(target).map(n -> _) }
+          })
+      val lowest = messages.reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
+      state.zipPartitions(lowest, preservesPartitioning = true) { (bs, ms) =>
+        val m = new scala.collection.mutable.LongMap[Long]
+        ms.foreach { case (n, l) => m(n) = l }
+        Iterator(bs.next().lower(m))
+      }
+    }
+
+    val caller = sc.getLocalProperty("spark.job.description")
+    /** checkpoint `s` in one job that also returns its frontier size */
+    def pin(s: RDD[VertexBlock], description: String): Long = {
+      sc.setJobDescription(description)
+      s.localCheckpoint()
+      sc.runJob(s, (it: Iterator[VertexBlock]) => it.map(_.fNode.length.toLong).sum).sum
+    }
+    val out = try {
+      var state = state0
+      var frontier = pin(state, s"fixpoint $tag load")
+      var r = 0
+      while (r < iters && frontier > 0) {
+        val next = round(state)
+        frontier = pin(next, s"fixpoint $tag round $r: frontier $frontier")
+        state.unpersist(blocking = false)
+        state = next
+        r += 1
+      }
+      state
+    } finally {
+      sc.setJobDescription(caller)
+      adj.unpersist(blocking = false)
+    }
+    val rows = out.flatMap(b => b.node.indices.iterator.map(i => Row(b.node(i), b.label(i))))
+    spark.createDataFrame(rows, StructType(Seq(
+        StructField("node", LongType), StructField("label", LongType))))
+      .select(col("node").cast(v0.schema("node").dataType).as("node"), col("label"))
+  }
+
+  /** name of the keyed edge RDD each [[minFixpoint]] call shuffles into
+    * its adjacency once */
+  private[graft] val FixpointEdgesName = "fixpoint edges"
+
+  /** Min-cost propagation: `iters` rounds of [[minFixpoint]] relaxing
+    * every frontier-out edge by `delta`. The frontier optimization stays
+    * exact for any non-negative edge cost: a round-k improvement at v
+    * arrives via a neighbor u whose label improved at round k-1
+    * (otherwise the same message existed at k-1 and v would already
+    * hold it), so relaxing only frontier-out edges yields exactly the
+    * full round-k Bellman-Ford labels.
+    *
+    * `prepared` (a session-memoized edge table) changes nothing and is
+    * kept for source compatibility: no call persists or releases its
+    * edge table. A call's one cache is the adjacency it builds from the
+    * edges, released when it returns. */
   def iterateMin(v0: DataFrame, edges0: DataFrame, iters: Int, delta: Long,
                  frontier0: Option[DataFrame] = None,
                  prepared: Boolean = false): DataFrame =
-    iterateCost(v0, edges0, iters, col("label") + delta, frontier0, prepared)
+    minFixpoint(v0, frontier0, edges0.withColumn("w", lit(delta)), iters, "min")
 
   /** Weighted variant: edges carry a per-edge cost column `w` and the
     * relaxation is min-plus (`label + w`) — bounded-round Bellman-Ford,
-    * i.e. single-source shortest paths by hop-limited distance. Same
-    * one-exchange-per-round shape and broadcast guard as [[iterateMin]];
-    * the DuckDB oracle unrolls the identical rounds so short-of-
-    * convergence results still compare exactly. */
+    * i.e. single-source shortest paths by hop-limited distance. The
+    * DuckDB oracle unrolls the identical rounds so short-of-convergence
+    * results still compare exactly. */
   def iterateMinPlus(v0: DataFrame, wedges: DataFrame, iters: Int,
                      frontier0: Option[DataFrame] = None,
                      prepared: Boolean = false): DataFrame =
-    iterateCost(v0, wedges, iters, col("label") + col("w"), frontier0, prepared)
+    minFixpoint(v0, frontier0, wedges, iters, "min-plus")
 
   private def symmetrize(e: DataFrame): DataFrame =
     e.select(col("src"), col("dst"))
@@ -355,47 +444,19 @@ object Iterative {
     * fixpoint the oracle's plain unrolled rounds reach. Do not use it
     * where bounded-round trajectory semantics are the contract.
     *
-    * Scale shape per round: ONE job, like every [[frontierLoop]] round —
-    * the hook's message aggregation (frontier broadcast when small,
-    * co-partitioned against the cached edge table otherwise) plus the
-    * shortcut as a second left join against the PREVIOUS round's
-    * already-checkpointed label table (|V| rows, broadcast under
-    * [[BroadcastMaxRowsKey]]). Jumping on the pre-hook pointers (not
-    * this round's fresh ones) keeps the round single-job — the fresh
-    * table would need its own eager materialization first (a
-    * first-cut implementation measured that at 2 jobs + an extra
-    * broadcast per round: 9.1 s warm, WORSE than the propagation
-    * loop it replaced) — and costs at most one extra round of lag on
-    * the doubling. */
+    * Scale shape per round: ONE [[minFixpoint]] job. The hook is the
+    * driver's message exchange; the shortcut is a second exchange in
+    * the same job: every row asks the partition of the node its label
+    * names for that node's label, and the answers join the hook's
+    * messages in one `reduceByKey(min)`. Jumping on the PREVIOUS
+    * round's pointers, not this round's fresh ones, keeps the round one
+    * job and costs at most one extra round of lag on the doubling.
+    * `v0` must hold one row per node (the lookup answers with the one
+    * label of the named node). */
   private[graft] def iterateMinJump(v0: DataFrame, edges: DataFrame,
-                                    iters: Int): DataFrame = {
-    val maxRows = broadcastMaxRows(v0.sparkSession)
-    // |V|: round 0's frontier is every node, and v keeps one row per node
-    var nNodes = -1L
-    frontierLoop(v0, None, iters, "jump ") { (v, frontier, frontierRows) =>
-      if (nNodes < 0) nNodes = frontierRows
-      // hook messages: min frontier-neighbor label per node
-      val m = edges
-        .join(hinted(frontier.select(col("node").as("src"), col("label")),
-          frontierRows, maxRows), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(min(col("label")).as("minl"))
-      // shortcut pointers: node -> label of the previous round
-      val lookup = hinted(v.select(col("node").as("jn"),
-        col("label").as("jl")), nNodes, maxRows)
-      // m's row bound is nNodes (one row per dst), NOT frontierRows:
-      // a small frontier on high-degree nodes can message most of the
-      // graph, so hinting by frontier size risks an over-threshold
-      // broadcast (ADVICE r9). When nNodes > maxRows AQE still
-      // converts the join at runtime from m's measured size.
-      v.join(hinted(m, nNodes, maxRows), Seq("node"), "left")
-        .join(lookup, col("label") === col("jn"), "left")
-        .select(col("node"), col("label"),
-          least(col("label"),
-            coalesce(col("minl"), col("label")),
-            coalesce(col("jl"), col("label"))).as("newl"))
-    }
-  }
+                                    iters: Int): DataFrame =
+    minFixpoint(v0, None, edges.withColumn("w", lit(0L)), iters, "jump",
+      shortcut = true)
 
   /** Converged connected components of the order↔part subgraph: unlike
     * [[connectedComponents]] (bounded hops — the reference-faithful
@@ -414,7 +475,7 @@ object Iterative {
     * co-keyed join, LINEAR in |E|, never the Σd² projection — has the
     * same part-connectivity, and the fixpoint loop then runs on a
     * graph of only |parts| nodes (~12% of the bipartite node count
-    * here; every round's tables broadcast). Orders rejoin through
+    * here). Orders rejoin through
     * their connector, and labels canonicalize to the component min
     * via one tiny rep table. At 100 TB the contraction is the same
     * two exchanges over the edge list, and the loop iterates on the
@@ -631,8 +692,8 @@ object Iterative {
     * THIS round send "minus one" messages to their neighbors —
     * deg′(v) = deg(v) − |edges v→dropped|, provably identical to the
     * recount (the DuckDB oracle still unrolls the recount form and the
-    * hashes agree). The dropped set rides the same broadcast guard as
-    * the min-propagation frontier, so a pathological first round
+    * hashes agree). The dropped set rides the [[BroadcastMaxRowsKey]]
+    * broadcast guard, so a pathological first round
     * (almost everything below k) degrades to a shuffle join instead of
     * an OOM. One partial-agg shuffle per round over the dropped
     * nodes' neighborhoods only — the 100× shape. */
@@ -810,7 +871,7 @@ object Iterative {
     val prio = Sketch.mix(pmod(col("node"), lit(Sketch.HashMod))) *
       MisIdMod + pmod(col("node"), lit(MisIdMod))
     // lazy checkpoints throughout: each round's count is the action
-    // that pins the block (see iterateCost) — one job per table per
+    // that pins the block — one job per table per
     // round instead of two. `mis` is a linear union of the (already
     // checkpointed) winners, so it needs no checkpoint of its own.
     var active = TpchGraph.nodes(spark, dir)

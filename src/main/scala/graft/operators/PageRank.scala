@@ -28,10 +28,10 @@ import graft.model.TpchGraph
   * variants share every plan property (broadcast guard, co-partitioned
   * rank⋈edge join, localCheckpoint lineage truncation).
   *
-  * Each round is one rank-join + partial-agg shuffle like
-  * [[Iterative.iterateMin]]: the rank table carries a broadcast hint
-  * only while its row count (materialized once from the checkpointed
-  * base) is under [[Iterative.BroadcastMaxRowsKey]] — beyond broadcast
+  * Each round is one rank-join + partial-agg shuffle: the rank table
+  * carries a broadcast hint only while its row count (materialized once
+  * from the checkpointed base) is under
+  * [[Iterative.BroadcastMaxRowsKey]] — beyond broadcast
   * range it joins the edge table co-partitioned, so the plan survives
   * node counts that would OOM a forced broadcast.
   */
@@ -107,9 +107,9 @@ object PageRank {
           col("src") === col("u"))
         .groupBy(col("dst").as("node"))
         .agg(sum("share").as("inflow"))
-      // LAZY localCheckpoint: truncates the logical plan identically
-      // (round k+1 plans against a constant-size LogicalRDD, see
-      // Iterative.iterateMin) but defers materialization — the final
+      // LAZY localCheckpoint: truncates the logical plan (round k+1
+      // plans against a constant-size LogicalRDD) but defers
+      // materialization — the final
       // top-k action executes the whole round chain as ONE job's
       // stages instead of one eager job per round. RDD lineage (cheap)
       // chains; Catalyst plans (the thing that blows up) do not.

@@ -95,12 +95,6 @@ object Scc {
   private def budgetCheck(iters: Int): Unit =
     require(iters < MaxIters, s"Scc exceeded $MaxIters driver iterations")
 
-  private def sccLog(msg: => String): Unit =
-    if (sys.env.contains("GRAFT_ITER_LOG")) {
-      val t = System.nanoTime() / 1e9
-      println(f"[scc] $t%.2f $msg")
-    }
-
   /** (node, scc_id) for every node with at least one edge; scc_id is
     * the minimum member id of the node's SCC. */
   def scc(spark: SparkSession, dir: String): DataFrame =
@@ -139,7 +133,6 @@ object Scc {
         val dead = deg.filter(col("din") <= 0 || col("dout") <= 0)
           .select("node")
         val deadRows = dead.count()
-        sccLog(s"trim dead=$deadRows live=${liveRows - deadRows}")
         if (deadRows == 0) trimming = false
         else {
           parts ::= dead.select(col("node"), col("node").as("scc_id"))
@@ -163,7 +156,6 @@ object Scc {
         }
       }
       val live = deg.select("node")
-      sccLog(s"phase live=$liveRows")
       if (liveRows == 0) outer = false
       else {
         // live subgraph, materialized once for the tail solve or the
@@ -179,7 +171,6 @@ object Scc {
           // Trim-pending zero-degree survivors (possible when the trim
           // loop exited on the cutoff, not the fixpoint) fall out as
           // Tarjan singletons like any other node.
-          sccLog(s"local solve nodes=$liveRows edges=$liveEdgeRows")
           val liveNodes = live.collect().map(_.getLong(0))
           val liveEdgeArr = liveEdges.select("src", "dst").collect()
             .map(r => (r.getLong(0), r.getLong(1)))
@@ -205,7 +196,6 @@ object Scc {
               (col("mc") > col("c")).as("chg")))
           frontier = merged.filter(col("chg")).select("node", "c")
           frontierRows = frontier.count()
-          sccLog(s"color frontier=$frontierRows")
           color = merged.select("node", "c")
         }
         // ---- SETTLE: backward reach to the color root within the class
@@ -228,7 +218,6 @@ object Scc {
             .join(settled, Seq("node"), "left_anti"))
           sFrontier = reach
           sRows = reach.count()
-          sccLog(s"settle reach=$sRows")
           if (sRows > 0)
             settled = Lineage.pin(settled.unionByName(reach))
         }

@@ -148,53 +148,58 @@ class PlanInvariantsSpec extends SparkTestBase {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
-  test("iterate round: small frontier broadcasts, large frontier does not") {
-    import spark.implicits._
-    import graft.operators.Iterative
-    val v = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("node", "label")
-    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    // disable auto-broadcast so the ONLY possible BroadcastExchange is
-    // the explicit hint under test (the fixture is tiny, AQE would
-    // otherwise broadcast it regardless and mask a forced hint)
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val small = Iterative.minRound(v, v, edges, 0L, frontierRows = 3L, maxRows = 100L)
-      assert(small.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
-      // a frontier past the cap (CC round 0 = the whole vertex set at
-      // 100× scale) must never carry a forced broadcast
-      val large = Iterative.minRound(v, v, edges, 0L, frontierRows = 101L, maxRows = 100L)
-      assert(!large.queryExecution.executedPlan.toString.contains("BroadcastExchange"),
-        large.queryExecution.executedPlan.toString)
-    } finally prev.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
+  /** every job and submitted stage `body` runs under a fresh job group:
+    * (job descriptions, per stage the names of its RDDs) */
+  private def traced(body: => Unit): (Seq[String], Seq[Seq[String]]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageSubmitted}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"plan-invariants-${System.nanoTime()}"
+    def ours(p: java.util.Properties) =
+      Option(p).exists(_.getProperty("spark.jobGroup.id") == group)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (ours(e.properties)) jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (ours(e.properties)) stages.add(e.stageInfo.rddInfos.map(_.name))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "traced")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graft.Bus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (jobs.asScala.toSeq, stages.asScala.toSeq)
   }
 
-  test("cached pre-partitioned edges are not re-shuffled by co-partitioned rounds") {
+  private def chainCc(iters: Int): Seq[(Long, Long)] = {
     import spark.implicits._
     import graft.operators.Iterative
-    val v = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("node", "label")
-    val raw = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
-    val cached = raw.repartition(org.apache.spark.sql.functions.col("src")).persist()
-    cached.count() // materialize so InMemoryTableScan reports partitioning
-    val prev = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      def plan(edges: org.apache.spark.sql.DataFrame) =
-        Iterative.minRound(v, v, edges, 0L, frontierRows = 101L, maxRows = 100L)
-          .queryExecution.executedPlan.toString
-      // an ENSURE_REQUIREMENTS exchange keyed on src = the planner
-      // re-shuffling the edge side for the join (the cache's own
-      // REPARTITION_BY_COL exchange prints inside InMemoryRelation and
-      // is the one-time cost, not a per-round one)
-      val reshuffle = raw"Exchange hashpartitioning\(src#\d+L, \d+\), ENSURE_REQUIREMENTS".r
-      assert(reshuffle.findFirstIn(plan(cached)).isEmpty, plan(cached))
-      assert(reshuffle.findFirstIn(plan(raw)).isDefined, plan(raw))
-    } finally {
-      prev.fold(spark.conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-      cached.unpersist()
-    }
+    val v = (1L to 10L).map(i => (i, i)).toDF("node", "label")
+    val e = (1L until 10L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("src", "dst")
+    Iterative.iterateMin(v, e, iters, 0L).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+  }
+
+  test("fixpoint round: a 10-node chain call runs at most rounds + 3 jobs") {
+    var got = Seq.empty[(Long, Long)]
+    val (jobs, _) = traced { got = chainCc(50) }
+    assert(got.forall(_._2 == 1L) && got.size == 10)
+    val rounds = jobs.count(_.startsWith("fixpoint min round"))
+    // one job per round: 9 hops plus the round that finds no change
+    assert(rounds === 10, jobs)
+    assert(jobs.size <= rounds + 3, jobs)
+  }
+
+  test("fixpoint adjacency: one edge shuffle per call, not one per round") {
+    import graft.operators.Iterative
+    val (jobs, stages) = traced(chainCc(50))
+    assert(jobs.count(_.startsWith("fixpoint min round")) > 1, jobs)
+    assert(stages.count(_.contains(Iterative.FixpointEdgesName)) === 1, stages)
   }
 
   test("pipe_epoch_shuffle windows per (epoch, shard), never a single partition") {

@@ -74,4 +74,20 @@ class SessionStoresSpec extends SparkTestBase {
     tx.success(); tx.finish()
     assert(FullCheck.violations(SessionStores.derive(s)).count() === 0L)
   }
+
+  test("a session string longer than 128 chars keeps its string-store ids unique") {
+    val s = new EngineSession(spark)
+    val tx = s.beginTx()
+    val a = tx.createNode()
+    // key-sorted: `a` (13 blocks) is chained before `b` (3 blocks)
+    tx.setProperty(a, "a", "x" * 200)
+    tx.setProperty(a, "b", "y" * 40)
+    tx.success(); tx.finish()
+    val stores = SessionStores.derive(s)
+    val dyns = stores.dyns.collect()
+    assert(dyns.length === 13 + 3)
+    assert(dyns.map(_.getAs[Long]("id")).distinct.length === dyns.length)
+    val v = FullCheck.violations(stores).collect()
+    assert(v.isEmpty, v.mkString(", "))
+  }
 }

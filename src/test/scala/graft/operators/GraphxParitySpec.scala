@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.model.TpchGraph
 
-/** Cross-engine parity: the DataFrame-first iterative operators
+/** Cross-engine parity: the min-propagation operators
   * ([[Iterative.iterateMin]]) must agree with GraphX's own
   * implementations at convergence — two independently-built engines
-  * (Pregel over RDDs vs Catalyst-planned joins) reaching the same
+  * (GraphX's Pregel and graft's round driver) reaching the same
   * fixpoint is the strongest semantic check available without an
   * external oracle. Run at sf0.001 where the fixpoint is reached well
   * inside the iteration budget. */
