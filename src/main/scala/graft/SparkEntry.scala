@@ -118,7 +118,6 @@ object SparkEntry {
     // cells make concurrent fills of one shared intermediate
     // single-evaluate (dependency chains serialize by blocking on the
     // winner's cell).
-    // GRAFT_WARM_LOG: per-fill seconds to stderr (warmup cost budget).
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -128,10 +127,7 @@ object SparkEntry {
       fills += scala.concurrent.Future {
         val t0 = System.nanoTime()
         try { f; () } catch { case _: Throwable => () }
-        val sec = (System.nanoTime() - t0) / 1e9
-        fillSecs.add(name -> sec)
-        if (sys.env.contains("GRAFT_WARM_LOG"))
-          System.err.println(f"[warm] $name%-24s $sec%.1fs")
+        fillSecs.add(name -> (System.nanoTime() - t0) / 1e9)
       }
     }
     // ---- input layer ----
@@ -680,33 +676,19 @@ object SparkEntry {
     // to the live one — n_mismatch > 0 ⇔ the backup is untrustworthy.
     "rec_backup_verify" -> ((s, dir) => storeBackupCache.getOrElseUpdate(s, dir) {
       import graft.streaming.Backup
-      // GRAFT_WARM_LOG prints the chain's internal phase split — the
-      // warmup critical path's irreducibility case is made from these
-      // numbers (VERDICT r12 Next #6)
-      var t0 = System.nanoTime()
-      def mark(phase: String): Unit = {
-        if (sys.env.contains("GRAFT_WARM_LOG"))
-          System.err.println(f"[warm]   backup_verify/$phase ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        t0 = System.nanoTime()
-      }
       val live = Corruption(RecordStores.deriveCached(s, dir))
-      mark("derive_wait")
       val tmp = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_store_backup_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
       Backup.fullStores(live, tmp)
-      mark("snapshot_write")
-      // persist the restored bundle and FORCE the check once: the
-      // result plan reads vR three times (histogram + both exceptAll
-      // sides) and the check's ~20 union branches would otherwise
-      // re-read the restored parquet per branch — together the bulk
-      // of the warmup critical path (VERDICT r12 Next #6)
+      // load the restored bundle (one job) and FORCE the check once:
+      // the result plan reads vR three times (histogram + both
+      // exceptAll sides), and each read would otherwise re-run the
+      // check's shuffle over the restored parquet
       val restored = Backup.restoreStores(s, tmp).persistAll()
       val vR = FullCheck.violations(restored).persist()
       vR.count()
       restored.unpersistAll()
-      mark("restore_check")
       val vL = cachedViolations(s, dir)
-      mark("violations_wait")
       // checkpointed (not persist+count): the 8-row result's plan spans
       // the full check over the restored bundle — O(1) re-analysis per
       // read, same move as the violations cache
@@ -716,7 +698,6 @@ object SparkEntry {
             .agg(count(lit(1)).as("n_mismatch")))
         .localCheckpoint(true)
       vR.unpersist()
-      mark("multiset_compare")
       out
     }),
     // A1 summary (ConsistencySummaryStatistics)

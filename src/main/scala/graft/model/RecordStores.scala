@@ -3,6 +3,7 @@ package graft.model
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheFill
 
 import graft.sources.Tpch
 
@@ -155,11 +156,15 @@ final case class Stores(
   def named: Seq[(String, DataFrame)] =
     Stores.Names.zip(productIterator.collect { case d: DataFrame => d }.toSeq)
 
-  /** Persist every store. A store read by several plans (the full
-    * check, its phase slices, a summary) is otherwise re-read from its
-    * source by each — e.g. a freshly restored backup's parquet. */
+  /** Persist every store and fill the caches not loaded yet in one job
+    * ([[CacheFill]]); a bundle already loaded runs no job. A store read
+    * by several plans (the full check, its phase slices, a summary) is
+    * otherwise re-read from its source by each — e.g. a freshly restored
+    * backup's parquet — and a cache left unfilled costs the first query
+    * one job per store. */
   def persistAll(): Stores = {
     named.foreach(_._2.persist())
+    CacheFill.fill(named.map(_._2))
     this
   }
 

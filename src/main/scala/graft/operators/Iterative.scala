@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.graft.Checkpoints
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -286,7 +287,7 @@ object Iterative {
       while (r < iters && frontier > 0) {
         val next = round(state)
         frontier = pin(next, s"fixpoint $tag round $r: frontier $frontier")
-        state.unpersist(blocking = false)
+        Checkpoints.release(state)
         state = next
         r += 1
       }

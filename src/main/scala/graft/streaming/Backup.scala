@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.model.Stores
 
@@ -23,6 +24,12 @@ import graft.model.Stores
   * with a different store id: the reference enforces exactly this
   * (TestBackup.java:264 makeSureStoreIdIsEnforced) because an
   * incremental applied across stores silently corrupts the target.
+  *
+  * A record-store backup ([[fullStores]]) holds one parquet directory
+  * per store, named by `Stores.Names`, plus `_store_watermarks`
+  * (`name=<last shipped record id>` per store), `_store_schemas`
+  * (`name=<schema json>` per store: the schema the full backup wrote,
+  * so a restore reads no parquet footer) and `_store_id`.
   */
 object Backup {
   private def watermarkPath(dir: String) = Paths.get(dir, "_watermark")
@@ -247,23 +254,40 @@ object Backup {
 
   private def storeWatermarksPath(dir: String) =
     Paths.get(dir, "_store_watermarks")
+  private def storeSchemasPath(dir: String) = Paths.get(dir, "_store_schemas")
+
+  /** `name=value` per store, one line each, in bundle order */
+  private def writeStoreLines(p: Path, values: Map[String, String]): Unit = {
+    Files.createDirectories(p.getParent)
+    Files.writeString(p,
+      Stores.Names.flatMap(n => values.get(n).map(v => s"$n=$v")).mkString("\n"))
+  }
+
+  private def readStoreLines(p: Path): Map[String, String] =
+    if (!Files.exists(p)) Map.empty
+    else Files.readString(p).linesIterator.filter(_.contains("="))
+      .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim }
+      .toMap
 
   /** per-store last-shipped record id — the RequestContext
     * lastAppliedTransactions analog (RequestContext.java:33-120 tracks
     * one applied-tx cursor PER datasource; here one record-id cursor
     * per store). Missing file ⇒ pre-incremental layout (full-only). */
-  def readStoreWatermarks(dir: String): Map[String, Long] = {
-    val p = storeWatermarksPath(dir)
-    if (!Files.exists(p)) Map.empty
-    else Files.readString(p).linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); k -> v.trim.toLong }
-      .toMap
-  }
+  def readStoreWatermarks(dir: String): Map[String, Long] =
+    readStoreLines(storeWatermarksPath(dir)).map { case (n, v) => n -> v.toLong }
 
-  private def writeStoreWatermarks(dir: String, w: Map[String, Long]): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    Files.writeString(storeWatermarksPath(dir),
-      Stores.Names.flatMap(n => w.get(n).map(v => s"$n=$v")).mkString("\n"))
+  private def writeStoreWatermarks(dir: String, w: Map[String, Long]): Unit =
+    writeStoreLines(storeWatermarksPath(dir), w.map { case (n, v) => n -> v.toString })
+
+  /** the schema each store was written with by the full backup; throws
+    * when the backup recorded none for some store */
+  private def readStoreSchemas(dir: String, op: String): Map[String, StructType] = {
+    val recorded = readStoreLines(storeSchemasPath(dir))
+    val missing = Stores.Names.filterNot(recorded.contains)
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"$op refused: backup at $dir records no schema for store(s) ${missing.mkString(", ")} (_store_schemas) — re-run a full backup")
+    recorded.map { case (n, json) => n -> DataType.fromJson(json).asInstanceOf[StructType] }
   }
 
   /** S5 proper: the reference's full backup streams ALL store files —
@@ -308,6 +332,8 @@ object Backup {
       }
       val marks = outcomes.collect { case scala.util.Success(m) => m }
       writeStoreWatermarks(dir, marks.toMap)
+      writeStoreLines(storeSchemasPath(dir),
+        s.named.map { case (n, df) => n -> df.schema.json }.toMap)
       writeStoreId(dir, storeId)
     } finally pool.shutdown()
   }
@@ -323,7 +349,9 @@ object Backup {
     * order — the record-granularity analog of tx-log catch-up.
     * Returns rows shipped per store; idempotent under re-run (all
     * zero). Refuses a wrong-store or full-only (no per-store
-    * watermarks) backup. */
+    * watermarks) backup, and, before anything is written, a store whose
+    * field names or types differ from the schema the full backup
+    * recorded: its delta would be read back under the recorded one. */
   def incrementalStores(s: Stores, dir: String,
                         storeId: String = DefaultStoreId): Map[String, Long] = {
     enforceStoreId(dir, storeId, "incrementalStores")
@@ -331,6 +359,14 @@ object Backup {
     if (marks.isEmpty)
       throw new IllegalStateException(
         s"incrementalStores refused: backup at $dir has no per-store watermarks — take a full backup first")
+    val recorded = readStoreSchemas(dir, "incrementalStores")
+    s.named.foreach { case (n, df) =>
+      // catalogString spells names and types, not nullability
+      val (was, now) = (recorded(n).catalogString, df.schema.catalogString)
+      if (was != now)
+        throw new IllegalStateException(
+          s"incrementalStores refused: store '$n' has schema $now, but the backup at $dir recorded $was — take a full backup")
+    }
     val shipped = s.named.map { case (n, df) =>
       val idc = storeIdCol(n)
       val last = marks.getOrElse(n, -1L)
@@ -348,7 +384,10 @@ object Backup {
   /** Restore the snapshot into a fresh [[Stores]] bundle — the copy a
     * consistency check then proves trustworthy
     * (BackupService.java:99-102: a backup is verified by running the
-    * full check over the restored copy). */
+    * full check over the restored copy). Each store is read under the
+    * schema the full backup recorded (all fields nullable, as parquet
+    * inference would give), so the restore runs no Spark job; a backup
+    * without recorded schemas is refused. */
   def restoreStores(spark: SparkSession, dir: String,
                     storeId: String = DefaultStoreId): Stores = {
     enforceStoreId(dir, storeId, "restoreStores")
@@ -359,6 +398,7 @@ object Backup {
     if (missing.nonEmpty)
       throw new IllegalStateException(
         s"restoreStores refused: backup at $dir is missing store file(s) ${missing.mkString(", ")} — torn copy; re-run a full backup")
-    Stores.fromNamed(n => spark.read.parquet(s"$dir/$n"))
+    val schemas = readStoreSchemas(dir, "restoreStores")
+    Stores.fromNamed(n => spark.read.schema(schemas(n)).parquet(s"$dir/$n"))
   }
 }

@@ -130,6 +130,38 @@ class FixpointSpec extends SparkTestBase {
     assert(seen.asScala.last === "caller") // the collect
   }
 
+  test("superseded rounds are released without the local-checkpoint unpersist warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("fixpoint-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    def warned = {
+      import scala.jdk.CollectionConverters._
+      lines.asScala.count(_.contains("was locally checkpointed"))
+    }
+    root.addAppender(appender)
+    try {
+      // the capture sees the warning a plain unpersist of a local checkpoint logs
+      val probe = spark.sparkContext.parallelize(1 to 4)
+      probe.localCheckpoint(); probe.count(); probe.unpersist()
+      assert(warned === 1, lines)
+      lines.clear()
+      val got = rows(Iterative.iterateMin(chainV.toDF("node", "label"),
+        chain.map(e => (e._1, e._2)).toDF("src", "dst"), 50, 0L))
+      assert(got.forall(_._2 == 1L) && got.size == 10)
+      assert(warned === 0, lines)
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   /** least node id of each node's component, over `edges` */
   private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
