@@ -18,11 +18,11 @@ object SparkEntry {
 
   /** cc_summary is a groupBy of cc_violations — share one violations
     * DF per (session, sf dir) so the check runs once (evicted
-    * on session end). Eagerly CHECKPOINTED rather than persisted: the
-    * check's logical plan (then a ~20-branch union) re-ran Catalyst analysis on every
-    * read (cc_violations' suite wall was 3.0 s/run at 0.48 exec-s —
-    * pure driver-side replanning ×3 runs ×2 bench core counts), while
-    * a LogicalRDD re-analyzes in O(1). Input-layer memo: the cold pass
+    * on session end). Eagerly CHECKPOINTED rather than persisted: a
+    * plan over the check's wide melt is re-optimized and re-planned on
+    * every read, and analysis of anything built on top of it walks its
+    * expressions (FullCheck's own analysis runs once per store layout),
+    * while a LogicalRDD plans in O(1). Input-layer memo: the cold pass
     * never rebuilds it, and all consumers (cc_summary, the backup
     * multiset compare) reach it through this getter. */
   private val violCache = new graft.SessionMemo[DataFrame]

@@ -1,8 +1,11 @@
 package graft.checker
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.PlanTemplate
 import org.apache.spark.sql.types._
 
 import graft.model.Stores
@@ -30,6 +33,12 @@ import graft.model.Stores
   * record of its key — a pointer whose key has no record meets none, so
   * the pairs are exactly a left join's rows — and one CASE per `field`
   * checks it. Claims and heads are counted over the same key.
+  *
+  * The plan is analyzed once per store layout (each store's column names
+  * and types, nullability ignored) and phase set, in each session, and
+  * rebound to every bundle of that layout ([[PlanTemplate]]): a restored
+  * copy, whose fields all read nullable, reuses its live bundle's plan.
+  * Analysis of the melt was about 0.2 s of driver time per call.
   *
   * Output schema: (record_type, violation, record_id) — one row per
   * violated predicate, summarized by [[summary]] like the reference's
@@ -247,14 +256,32 @@ object FullCheck {
         when(col("ptr").isNotNull, col("ptr.src_id")).otherwise(col("id")).as("record_id"))
   }
 
+  /** [[check]]'s analyzed plans, by store layout and phase set */
+  private val templates = new graft.SessionMemo[PlanTemplate]
+  /** templates built so far, in every session */
+  private[checker] val templatesBuilt = new AtomicInteger
+
+  /** [[check]] over `s`, rebound from its layout's template. */
+  private def bound(s: Stores, only: Set[String]): DataFrame = {
+    val stores = s.named.map(_._2)
+    val spark = stores.head.sparkSession
+    val key = (stores.map(PlanTemplate.layout) :+ only.toSeq.sorted.mkString(",")).mkString("\n")
+    templates.getOrElseUpdate(spark, key) {
+      templatesBuilt.incrementAndGet()
+      PlanTemplate(spark, stores.map(_.schema)) { leaves =>
+        check(Stores.fromNamed(Stores.Names.zip(leaves).toMap), only)
+      }
+    }.bind(stores)
+  }
+
   /** All checks in one plan. */
-  def violations(s: Stores): DataFrame = check(s, PhaseNames.toSet)
+  def violations(s: Stores): DataFrame = bound(s, PhaseNames.toSet)
 
   /** [[violations]] sliced by phase, for timing each phase alone: each
     * slice melts only its own rows; together they are exactly
     * [[violations]]. */
   def phases(s: Stores): Seq[(String, DataFrame)] =
-    PhaseNames.map(n => n -> check(s, Set(n)))
+    PhaseNames.map(n => n -> bound(s, Set(n)))
 
   /** A1: per-(record type, violation) summary
     * (ConsistencySummaryStatistics). */

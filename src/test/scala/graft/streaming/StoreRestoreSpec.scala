@@ -74,10 +74,14 @@ class StoreRestoreSpec extends SparkTestBase {
     val copy = Backup.restoreStores(spark, backedUp()).persistAll()
     try {
       var got = Map.empty[(String, String), Long]
-      assert(jobsOf {
+      val copyJobs = jobsOf {
         got = FullCheck.summary(copy).collect()
           .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-      } === liveJobs)
+      }
+      assert(copyJobs === liveJobs)
+      // the summary rebound from the live bundle's template runs no more
+      // jobs than a freshly analyzed one did
+      assert(copyJobs <= 3, s"$copyJobs jobs")
       assert(got === FullCheck.summary(live).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
     } finally copy.unpersistAll()
