@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.graft.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.SparkTestBase
 import graft.model.Stores
@@ -180,6 +181,76 @@ class FullCheckSpec extends SparkTestBase {
 
   private def multiset(df: DataFrame): Map[Seq[Any], Int] =
     df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+
+  /** The consistent fixture plus records with nulls in ids, `in_use`,
+    * pointers, `ptype` and `length`: SQL's three-valued logic decides
+    * which checks fire (a rule whose condition is null falls through). */
+  private type L = Option[Long]
+  private type B = Option[Boolean]
+  private def nullFixture: Stores = {
+    val (t, n) = (Some(true), None)
+    def l(v: Long): L = Some(v)
+    fixture.copy(
+      nodes = Seq[(L, B, L, L)]((l(1), t, l(10), l(4)), (l(2), t, l(10), l(8)),
+        (l(3), n, l(10), l(-1)), (n, t, l(10), l(-1)), (l(5), t, n, n), (l(6), t, l(11), l(-1)),
+        (l(7), t, l(12), l(41)))
+        .toDF("id", "in_use", "next_rel", "next_prop"),
+      rels = Seq[(L, B, Option[Int], L, L, L, L, L, L, L)](
+        (l(10), t, Some(0), l(1), l(2), l(-1), l(-1), l(-1), l(-1), l(40)),
+        (l(11), t, Some(0), n, l(6), n, l(12), l(-1), l(-1), l(-1)),
+        (l(12), n, None, l(7), l(3), l(11), n, l(-1), l(-1), l(-1)),
+        (l(13), t, Some(0), l(3), l(6), l(12), l(-1), n, l(-1), n))
+        .toDF("id", "in_use", "type_id", "first_node", "second_node",
+          "first_prev", "first_next", "second_prev", "second_next", "next_prop"),
+      neo = Seq[(L, B, L)]((l(0), t, l(0)), (l(1), n, n)).toDF("id", "in_use", "next_prop"),
+      props = Seq[(L, B, L, L, L)]((l(0), t, l(0), l(-1), l(-1)), (l(4), t, l(1), l(-1), l(-1)),
+        (l(8), t, l(2), l(-1), l(-1)), (l(40), t, l(10), l(-1), l(-1)),
+        (l(41), n, l(7), l(-1), l(42)), (l(42), t, l(7), n, n), (n, t, l(3), l(-1), l(-1)))
+        .toDF("id", "in_use", "owner", "prev_prop", "next_prop"),
+      blocks = Seq[(L, Int, Option[Int], Option[Int], L, L)](
+        (l(0), 0, Some(0), Some(1), l(-1), l(0)), (l(4), 0, Some(0), Some(3), l(-1), l(4)),
+        (l(4), 1, Some(0), Some(5), l(200), l(24)), (l(8), 0, Some(0), Some(4), l(100), l(20)),
+        (l(40), 0, Some(0), Some(1), l(-1), l(0)), (l(41), 0, None, None, l(300), l(0)),
+        (l(41), 1, Some(0), Some(4), n, l(20)), (l(42), 0, Some(0), Some(4), n, l(20)),
+        (n, 0, Some(0), Some(5), n, l(8)))
+        .toDF("prop_id", "idx", "key_id", "ptype", "value_ref", "vlen"),
+      dyns = Seq[(L, B, L, L)]((l(100), t, l(16), l(101)), (l(101), t, l(4), l(-1)),
+        (l(102), t, n, l(103)), (l(103), n, l(4), l(-1)), (n, t, l(4), l(104)),
+        (l(104), t, l(16), n), (l(112), n, n, l(112)))
+        .toDF("id", "in_use", "length", "next_block"),
+      arrays = Seq[(L, B, L, L)]((l(200), t, l(16), l(201)), (l(201), t, n, l(-1)),
+        (l(208), t, l(8), n), (n, n, l(8), l(-1)))
+        .toDF("id", "in_use", "length", "next_block"),
+      relTypes = Seq[(L, B, L)]((l(0), t, l(0)), (l(1), t, n), (l(2), n, l(0)))
+        .toDF("id", "in_use", "name_id"),
+      typeNames = Seq[(L, B, L, L)]((l(0), t, l(9), l(-1)), (l(1), t, n, n))
+        .toDF("id", "in_use", "length", "next_block"))
+  }
+
+  test("nulls in ids, in_use, pointers, ptype and length follow SQL's three-valued logic") {
+    val s = nullFixture
+    val got = multiset(FullCheck.violations(s))
+    assert(FullCheck.violations(s).schema === StructType(Seq(
+      StructField("record_type", StringType), StructField("violation", StringType, nullable = false),
+      StructField("record_id", LongType))))
+    // captured from the DataFrame formulation of the check (window + CASE)
+    assert(got === Map[Seq[Any], Int](
+      Seq("array", "orphan_chain", 208L) -> 1,
+      Seq("label", "name_block_not_in_use", 1L) -> 1,
+      Seq("node", "relationship_not_first_in_chain", 7L) -> 1,
+      Seq("property", "array_not_in_use", null) -> 1,
+      Seq("property", "key_not_in_use", 41L) -> 1,
+      Seq("property", "orphan_chain", null) -> 1,
+      Seq("property", "string_not_in_use", 41L) -> 1,
+      Seq("property", "string_not_in_use", 42L) -> 1,
+      Seq("relationship", "source_next_references_other_node", 11L) -> 1,
+      Seq("relationship", "source_node_not_in_use", 11L) -> 1,
+      Seq("relationship", "source_prev_does_not_reference_back", 13L) -> 1,
+      Seq("string", "multiple_owners", null) -> 1,
+      Seq("string", "orphan_chain", 104L) -> 1,
+      Seq("string", "record_not_full_references_next", null) -> 1))
+    assert(multiset(FullCheck.phases(s).map(_._2).reduce(_ unionAll _)) === got)
+  }
 
   /** ScaleCheckSpec's generated store under the seeded corruption */
   private lazy val corrupted: Stores = Corruption(ScaleCheck.stores(spark, 500L)).persistAll()
