@@ -18,13 +18,12 @@ object SparkEntry {
 
   /** cc_summary is a groupBy of cc_violations — share one violations
     * DF per (session, sf dir) so the check runs once (evicted
-    * on session end). Eagerly CHECKPOINTED rather than persisted: a
-    * plan over the check's wide melt is re-optimized and re-planned on
-    * every read, and analysis of anything built on top of it walks its
-    * expressions (FullCheck's own analysis runs once per store layout),
-    * while a LogicalRDD plans in O(1). Input-layer memo: the cold pass
-    * never rebuilds it, and all consumers (cc_summary, the backup
-    * multiset compare) reach it through this getter. */
+    * on session end). Eagerly CHECKPOINTED rather than persisted: the
+    * check's own leaf re-runs its store scans and exchange on every
+    * read, while the checkpoint's blocks are read back as they are.
+    * Input-layer memo: the cold pass never rebuilds it, and all
+    * consumers (cc_summary, the backup multiset compare) reach it
+    * through this getter. */
   private val violCache = new graft.SessionMemo[DataFrame]
   private def cachedViolations(s: SparkSession, dir: String): DataFrame =
     violCache.getOrElseUpdate(s, dir)(
@@ -51,9 +50,8 @@ object SparkEntry {
   private val chainRepairCache = new graft.SessionMemo[DataFrame](outputMemo = true)
   private val diffCheckCache = new graft.SessionMemo[DataFrame](outputMemo = true)
 
-  /** cc_summary's groupBy re-scanned the ~20-branch persisted
-    * violations union per touch (5.6 exec-s warm in the r13 artifact,
-    * above the ≥5 s memo cut — VERDICT r13 Next #1); the summary is
+  /** cc_summary's groupBy re-scanned the violations per touch (5.6
+    * exec-s warm in the r13 artifact, above the ≥5 s memo cut); the summary is
     * (session, dir)-pure, so it joins the output layer. Its cold
     * rebuild prices the groupBy over the (input-layer, still-cached)
     * violations — the full check itself stays priced by cc_violations. */

@@ -2,6 +2,10 @@ package graft.checker
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.graft.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -254,6 +258,8 @@ class FullCheckSpec extends SparkTestBase {
 
   /** ScaleCheckSpec's generated store under the seeded corruption */
   private lazy val corrupted: Stores = Corruption(ScaleCheck.stores(spark, 500L)).persistAll()
+  /** a second, smaller corrupted bundle */
+  private lazy val smaller: Stores = Corruption(ScaleCheck.stores(spark, 300L)).persistAll()
 
   test("corrupted generated store: exact violation counts, duplicates included") {
     val v = FullCheck.violations(corrupted)
@@ -299,7 +305,10 @@ class FullCheckSpec extends SparkTestBase {
     assert(multiset(ps.map(_._2).reduce(_ unionAll _)) === multiset(FullCheck.violations(corrupted)))
   }
 
-  test("the full check's summary runs in at most 10 jobs") {
+  test("the full check's summary runs in at most 2 jobs") {
+    // a bundle with violations, its stores already cached: the scans and
+    // the exchange, then the summary's own aggregation
+    val s = corrupted
     val sc = spark.sparkContext
     val group = "full-check-jobs"
     val jobs = new AtomicInteger
@@ -309,13 +318,47 @@ class FullCheckSpec extends SparkTestBase {
           jobs.incrementAndGet()
     }
     sc.addSparkListener(listener)
-    sc.setJobGroup(group, "FullCheck.summary over the fixture")
-    try FullCheck.summary(fixture).collect()
+    sc.setJobGroup(group, "FullCheck.summary over a corrupted bundle")
+    try FullCheck.summary(s).collect()
     finally {
       sc.clearJobGroup()
       Bus.drain(sc)
       sc.removeSparkListener(listener)
     }
-    assert(jobs.get() <= 10, s"${jobs.get()} jobs")
+    assert(jobs.get() <= 2, s"${jobs.get()} jobs")
+  }
+
+  /** `df`'s rows with its plan cut off */
+  private def fixed(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  test("two bundles' checks in one plan: exceptAll and unionAll") {
+    val (a, b) = (corrupted, smaller)
+    val (va, vb) = (FullCheck.violations(a), FullCheck.violations(b))
+    val (fa, fb) = (fixed(FullCheck.violations(a)), fixed(FullCheck.violations(b)))
+    val aNotB = multiset(fa.exceptAll(fb))
+    assert(aNotB.nonEmpty)
+    assert(multiset(va.exceptAll(vb)) === aNotB)
+    assert(multiset(vb.exceptAll(va)) === multiset(fb.exceptAll(fa)))
+    assert(multiset(va.unionAll(vb)) === multiset(fa.unionAll(fb)))
+    assert(multiset(va.exceptAll(va)).isEmpty)
+  }
+
+  test("a bundle in which two stores are the same frame checks correctly") {
+    // the string store read as both dynamic stores, against a copy of it
+    // under a plan of its own
+    val b = smaller
+    val twice = b.copy(arrays = b.dyns)
+    val apart = b.copy(arrays = spark.createDataFrame(b.dyns.rdd, b.dyns.schema))
+    val want = multiset(FullCheck.violations(apart))
+    assert(want.keys.exists(_.head == "array"))
+    assert(multiset(FullCheck.violations(twice)) === want)
+  }
+
+  test("two threads checking different bundles concurrently get correct results") {
+    val (a, b) = (corrupted, smaller)
+    val (wa, wb) = (multiset(FullCheck.violations(a)), multiset(FullCheck.violations(b)))
+    val got = Await.result(Future.sequence(Seq(a, b, a, b).map(s =>
+      Future(multiset(FullCheck.violations(s))))), Duration.Inf)
+    assert(got === Seq(wa, wb, wa, wb))
   }
 }

@@ -79,8 +79,6 @@ class StoreRestoreSpec extends SparkTestBase {
           .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
       }
       assert(copyJobs === liveJobs)
-      // the summary rebound from the live bundle's template runs no more
-      // jobs than a freshly analyzed one did
       assert(copyJobs <= 3, s"$copyJobs jobs")
       assert(got === FullCheck.summary(live).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap)
