@@ -678,14 +678,12 @@ object SparkEntry {
       val tmp = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_store_backup_" + Integer.toHexString(dir.hashCode)).getAbsolutePath
       Backup.fullStores(live, tmp)
-      // load the restored bundle (one job) and FORCE the check once:
-      // the result plan reads vR three times (histogram + both
-      // exceptAll sides), and each read would otherwise re-run the
-      // check's shuffle over the restored parquet
-      val restored = Backup.restoreStores(s, tmp).persistAll()
-      val vR = FullCheck.violations(restored).persist()
+      // FORCE the check over the restored copy once: the result plan
+      // reads vR three times (histogram + both exceptAll sides), and
+      // each read would otherwise re-run the check's shuffle over the
+      // restored parquet (the check itself reads each store once)
+      val vR = FullCheck.violations(Backup.restoreStores(s, tmp)).persist()
       vR.count()
-      restored.unpersistAll()
       val vL = cachedViolations(s, dir)
       // checkpointed (not persist+count): the 8-row result's plan spans
       // the full check over the restored bundle — O(1) re-analysis per

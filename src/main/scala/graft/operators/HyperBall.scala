@@ -130,16 +130,19 @@ object HyperBall {
   def harmonic(spark: SparkSession, dir: String): DataFrame =
     memo.getOrElseUpdate(spark, dir)(compute(spark, dir))._2
 
-  /** GRAFT_HB_LOG=1: per-phase wall seconds to stderr (round update,
-    * top-k, exact-ball probe, harmonic, neighborhood) — the attribution
-    * split for the compute's cold cost. */
-  private def hbLog(tag: String, t0: Long): Long = {
-    if (sys.env.contains("GRAFT_HB_LOG"))
-      System.err.println(f"[hb] $tag%-12s ${(System.nanoTime() - t0) / 1e9}%6.2fs")
-    System.nanoTime()
+  /** [[phases]] with each phase's jobs described `hyperball <phase>`
+    * (pyramid+topk, probe+out, harmonic, neighborhood), so a listener
+    * can attribute the compute's cold cost; the caller's description
+    * is restored on return, as `Iterative.minFixpoint` does. */
+  private def compute(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    try phases(spark, dir, p => sc.setJobDescription(s"hyperball $p"))
+    finally sc.setJobDescription(caller)
   }
 
-  private def compute(spark: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
+  private def phases(spark: SparkSession, dir: String,
+                     phase: String => Unit): (DataFrame, DataFrame, DataFrame) = {
     // session-memoized symmetric edge table, src-partitioned: every
     // round (and the exact-ball probe) joins on src against this copy
     val edges = Iterative.symAllSrc(spark, dir)
@@ -151,7 +154,7 @@ object HyperBall {
     val seeded = nodeKinds
       .select(col("node"), shiftright(h, SuffixBits).as("bucket"),
         (lit(Scale) - bitLen(pmod(h, lit(1L << SuffixBits)))).as("rho"))
-    var t0 = System.nanoTime()
+    phase("pyramid+topk")
     var regs = seeded.select(col("node") +: packCols: _*).persist()
     val cached = scala.collection.mutable.ListBuffer(regs)
     val rounds = scala.collection.mutable.ListBuffer(regs) // r0..rIters
@@ -177,7 +180,7 @@ object HyperBall {
     // top-10 balls by integer order; tiny — checkpoint so the seeds
     // feed both the BFS probe and the final join without re-sorting
     val top = z.orderBy(col("z"), col("node")).limit(TopN).localCheckpoint()
-    t0 = hbLog("pyramid+topk", t0)
+    phase("probe+out")
 
     // exact |ball(seed, Iters)| for the winners only: 10-seed BFS in
     // FRONTIER form — only nodes first reached last round expand, and
@@ -216,7 +219,7 @@ object HyperBall {
       .select(col("node"), col("kind"), col("z"),
         (lit(EstNumerator) / col("z")).as("est"), col("exact_ball"))
       .localCheckpoint(true) // materialize, then release the pyramid
-    t0 = hbLog("probe+out", t0)
+    phase("harmonic")
 
     // harmonic centrality for the same TopN winners: per-round z read
     // off each persisted register round restricted to the 10 winners
@@ -235,7 +238,7 @@ object HyperBall {
         (0 to Iters).map(t => col(s"z$t")).toList :::
         harmExpr.as("harmonic") :: Nil: _*)
       .localCheckpoint(true)
-    t0 = hbLog("harmonic", t0)
+    phase("neighborhood")
 
     // neighborhood function: one row per round t, exact-integer sums
     val estInt = EstNumerator.toLong
@@ -251,7 +254,6 @@ object HyperBall {
             .over(org.apache.spark.sql.expressions.Window
               .partitionBy(lit(0)))) // Iters+1 rows total
       .localCheckpoint(true)
-    t0 = hbLog("neighborhood", t0)
 
     cached.foreach(_.unpersist())
     // a cold-mode bypass rebuilds all three; the memo layer only drains

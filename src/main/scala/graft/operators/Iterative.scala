@@ -314,13 +314,10 @@ object Iterative {
     * hold it), so relaxing only frontier-out edges yields exactly the
     * full round-k Bellman-Ford labels.
     *
-    * `prepared` (a session-memoized edge table) changes nothing and is
-    * kept for source compatibility: no call persists or releases its
-    * edge table. A call's one cache is the adjacency it builds from the
-    * edges, released when it returns. */
+    * No call persists or releases its edge table. A call's one cache is
+    * the adjacency it builds from the edges, released when it returns. */
   def iterateMin(v0: DataFrame, edges0: DataFrame, iters: Int, delta: Long,
-                 frontier0: Option[DataFrame] = None,
-                 prepared: Boolean = false): DataFrame =
+                 frontier0: Option[DataFrame] = None): DataFrame =
     minFixpoint(v0, frontier0, edges0.withColumn("w", lit(delta)), iters, "min")
 
   /** Weighted variant: edges carry a per-edge cost column `w` and the
@@ -329,8 +326,7 @@ object Iterative {
     * DuckDB oracle unrolls the identical rounds so short-of-convergence
     * results still compare exactly. */
   def iterateMinPlus(v0: DataFrame, wedges: DataFrame, iters: Int,
-                     frontier0: Option[DataFrame] = None,
-                     prepared: Boolean = false): DataFrame =
+                     frontier0: Option[DataFrame] = None): DataFrame =
     minFixpoint(v0, frontier0, wedges, iters, "min-plus")
 
   private def symmetrize(e: DataFrame): DataFrame =
@@ -356,7 +352,7 @@ object Iterative {
     val edges = symHasPartSrc(spark, dir)
     val vertices = edges.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    iterateMin(vertices, edges, CcIters, 0L, prepared = true)
+    iterateMin(vertices, edges, CcIters, 0L)
   }
 
   /** Synchronous label-propagation rounds — deterministic by
@@ -600,8 +596,7 @@ object Iterative {
     val vertices = g.nodes.select(col("id").as("node"),
       when(col("kind") === "region", 0L).otherwise(Unreachable).as("label"))
     val seeds = vertices.filter(col("label") === 0L)
-    iterateMin(vertices, edges, BfsIters, 1L, frontier0 = Some(seeds),
-        prepared = true)
+    iterateMin(vertices, edges, BfsIters, 1L, frontier0 = Some(seeds))
       .groupBy(col("label").as("depth"))
       .agg(count(lit(1)).as("n_nodes"))
   }
@@ -633,8 +628,7 @@ object Iterative {
     val vertices = g.nodes.select(col("id").as("node"),
       when(col("kind") === "region", 0L).otherwise(Unreachable).as("label"))
     val seeds = vertices.filter(col("label") === 0L)
-    iterateMinPlus(vertices, wedges, SsspIters, frontier0 = Some(seeds),
-        prepared = true)
+    iterateMinPlus(vertices, wedges, SsspIters, frontier0 = Some(seeds))
       .groupBy(col("label").as("dist"))
       .agg(count(lit(1)).as("n_nodes"))
   }

@@ -148,35 +148,6 @@ class PlanInvariantsSpec extends SparkTestBase {
     assert(!p.contains("SortMergeJoin"), p)
   }
 
-  /** every job and submitted stage `body` runs under a fresh job group:
-    * (job descriptions, per stage the names of its RDDs) */
-  private def traced(body: => Unit): (Seq[String], Seq[Seq[String]]) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-      SparkListenerStageSubmitted}
-    import scala.jdk.CollectionConverters._
-    val sc = spark.sparkContext
-    val group = s"plan-invariants-${System.nanoTime()}"
-    def ours(p: java.util.Properties) =
-      Option(p).exists(_.getProperty("spark.jobGroup.id") == group)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties)) stages.add(e.stageInfo.rddInfos.map(_.name))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "traced")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.graft.Bus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    (jobs.asScala.toSeq, stages.asScala.toSeq)
-  }
-
   private def chainCc(iters: Int): Seq[(Long, Long)] = {
     import spark.implicits._
     import graft.operators.Iterative

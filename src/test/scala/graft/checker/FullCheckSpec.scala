@@ -1,13 +1,9 @@
 package graft.checker
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.graft.Bus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -309,23 +305,8 @@ class FullCheckSpec extends SparkTestBase {
     // a bundle with violations, its stores already cached: the scans and
     // the exchange, then the summary's own aggregation
     val s = corrupted
-    val sc = spark.sparkContext
-    val group = "full-check-jobs"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "FullCheck.summary over a corrupted bundle")
-    try FullCheck.summary(s).collect()
-    finally {
-      sc.clearJobGroup()
-      Bus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get() <= 2, s"${jobs.get()} jobs")
+    val (jobs, _) = traced(FullCheck.summary(s).collect(), "FullCheck.summary over a corrupted bundle")
+    assert(jobs.size <= 2, s"${jobs.size} jobs")
   }
 
   /** `df`'s rows with its plan cut off */

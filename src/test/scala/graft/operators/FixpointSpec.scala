@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -103,31 +102,18 @@ class FixpointSpec extends SparkTestBase {
 
   test("each round job is described by its round and frontier; the caller's description is restored") {
     val sc = spark.sparkContext
-    val group = "fixpoint-descriptions"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "caller")
-    try {
+    val (seen, _) = traced({
+      val group = sc.getLocalProperty("spark.jobGroup.id")
       val out = Iterative.iterateMin(chainV.toDF("node", "label"),
         chain.map(e => (e._1, e._2)).toDF("src", "dst"), 50, 0L)
       assert(sc.getLocalProperty("spark.job.description") === "caller")
       assert(sc.getLocalProperty("spark.jobGroup.id") === group)
       out.collect()
-    } finally {
-      sc.clearJobGroup()
-      org.apache.spark.graft.Bus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    val rounds = seen.asScala.toSeq.filter(_.startsWith("fixpoint min round"))
+    }, "caller")
+    val rounds = seen.filter(_.startsWith("fixpoint min round"))
     // CC on an id-ordered chain: round r lowers the 9 - r nodes past r + 1
     assert(rounds === (0 until 10).map(r => s"fixpoint min round $r: frontier ${10 - r}"))
-    assert(seen.asScala.last === "caller") // the collect
+    assert(seen.last === "caller") // the collect
   }
 
   test("superseded rounds are released without the local-checkpoint unpersist warning") {

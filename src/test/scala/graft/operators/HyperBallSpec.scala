@@ -50,6 +50,22 @@ class HyperBallSpec extends SparkTestBase {
     assert(math.abs(nbh.last.getAs[Double]("frac_of_final") - 1.0) < 1e-12)
   }
 
+  test("each phase runs under its own job description; the caller's is restored") {
+    val sc = spark.sparkContext
+    val (jobs, _) = traced({
+      // bypass the memo so the phases run again
+      graft.SessionMemo.coldMode = true
+      try HyperBall.hyperball(spark, dir)
+      finally {
+        graft.SessionMemo.coldMode = false
+        graft.SessionMemo.drainColdOrphans()
+      }
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+    }, "caller")
+    assert(jobs.filter(_.startsWith("hyperball ")).distinct === Seq("hyperball pyramid+topk",
+      "hyperball probe+out", "hyperball harmonic", "hyperball neighborhood"), jobs)
+  }
+
   test("memoized: second call returns the identical cached plan") {
     val again = HyperBall.hyperball(spark, dir)
     assert(again.collect().toSet === rows.toSet)

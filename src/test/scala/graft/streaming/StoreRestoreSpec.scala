@@ -1,9 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -17,25 +15,7 @@ import graft.model.Stores
   * over it runs only its own plan's jobs. */
 class StoreRestoreSpec extends SparkTestBase {
   /** jobs `body` starts, counted under a fresh job group */
-  private def jobsOf(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"store-restore-${System.nanoTime()}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "counted")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.graft.Bus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get()
-  }
+  private def jobsOf(body: => Any): Int = traced(body)._1.size
 
   private lazy val live: Stores = Corruption(ScaleCheck.stores(spark, 500L)).persistAll()
 
